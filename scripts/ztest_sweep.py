@@ -1,93 +1,58 @@
-"""Sweep ALL candidate reference ztests through the harness; report
-pass/fail per case. Triage tool, not a test."""
-import glob, os, sys, traceback
+"""Sweep reference ztest directories through the tests/test_ztests.py
+harness and bucket each case not yet in its case list: PASS, MISMATCH
+or ERROR. A triage tool, not a test.
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
-os.chdir("/root/repo")
+Usage: python scripts/ztest_sweep.py ZTEST_DIR [...]
+"""
 
-import yaml
-from zed_spark.session import build_spark
+from __future__ import annotations
 
-import test_ztests as H
+import glob
+import os
+import sys
 
-DIRS = [
-    "/root/reference/runtime/sam/expr/ztests",
-    "/root/reference/runtime/sam/expr/function/ztests",
-    "/root/reference/runtime/sam/expr/agg/ztests",
-    "/root/reference/runtime/ztests/expr",
-    "/root/reference/runtime/ztests/expr/function",
-    "/root/reference/runtime/ztests/op",
-    "/root/reference/runtime/ztests/op/sort",
-    "/root/reference/runtime/sam/op/groupby/ztests",
-    "/root/reference/runtime/sam/op/ztests",
-    "/root/reference/runtime/sam/op/traverse/ztests",
-    "/root/reference/runtime/sam/op/join/ztests",
-    "/root/reference/runtime/sam/op/switcher/ztests",
-    "/root/reference/runtime/sam/op/fuse/ztests",
-    "/root/reference/runtime/sam/op/exprswitch/ztests",
-    "/root/reference/runtime/sam/op/yield/ztests",
-    "/root/reference/runtime/sam/op/tail/ztests",
-    "/root/reference/runtime/sam/op/shape/ztests",
-    "/root/reference/runtime/sam/op/merge/ztests",
-    "/root/reference/runtime/sam/op/explode/ztests",
-    "/root/reference/runtime/sam/op/uniq/ztests",
-    "/root/reference/runtime/sam/op/top/ztests",
-    "/root/reference/runtime/sam/op/sort/ztests",
-    "/root/reference/ztests",
-]
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
-done = set()
-import os as _os
-if _os.path.exists("/tmp/retry_skip.txt"):
-    for line in open("/tmp/retry_skip.txt"):
-        done.add(line.strip())
+os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
-existing = set()
-for c in H.CASES:
-    existing.add(c if c.startswith("/") else os.path.join(H.ZTESTS, c))
 
-spark = build_spark()
-results = {"pass": [], "fail": [], "noform": []}
-only = sys.argv[1] if len(sys.argv) > 1 else None
-for d in DIRS:
-    for path in sorted(glob.glob(os.path.join(d, "*.yaml"))):
-        if path in existing:
-            continue
-        if only and only not in path:
-            continue
-        if path in done:
-            continue
-        try:
-            case = yaml.safe_load(open(path))
-        except Exception:
-            results["noform"].append((path, "yaml-parse"))
-            continue
-        if not isinstance(case, dict) or not {"zed", "input", "output"} <= set(case):
-            results["noform"].append((path, f"keys={sorted(case) if isinstance(case, dict) else type(case)}"))
-            continue
-        if not isinstance(case.get("input"), str) or not isinstance(case.get("output"), str):
-            results["noform"].append((path, "non-str io"))
-            continue
-        import signal
+def main(dirs: list[str]) -> None:
+    import test_ztests as H
 
-        def _alarm(sig, frm):
-            raise TimeoutError("case timeout")
+    from zed_spark.session import build_spark
 
-        signal.signal(signal.SIGALRM, _alarm)
-        signal.alarm(60)
-        try:
-            H._run_case(spark, path)
-            results["pass"].append(path)
-            print("P", path, flush=True)
-        except Exception as e:
-            msg = traceback.format_exception_only(type(e), e)[-1].strip()
-            results["fail"].append((path, msg[:200]))
-            print("F", path, "|", msg.replace("\n", " ")[:160], flush=True)
-        finally:
-            signal.alarm(0)
+    spark = build_spark(
+        master="local[8]",
+        extra_conf={"spark.sql.shuffle.partitions": "8"},
+    )
+    already = {
+        c if c.startswith("/") else os.path.join(H.ZTESTS, c) for c in H.CASES
+    }
+    results = {"PASS": [], "MISMATCH": [], "ERROR": []}
+    for d in dirs:
+        for path in sorted(glob.glob(os.path.join(d, "*.yaml"))):
+            if path in already:
+                continue
+            try:
+                H._run_case(spark, path)
+                results["PASS"].append(path)
+                print(f"PASS {path}", flush=True)
+            except AssertionError as e:
+                results["MISMATCH"].append(path)
+                first = str(e).split("\n")[0][:160]
+                print(f"MISMATCH {path} :: {first}", flush=True)
+            except Exception as e:
+                results["ERROR"].append(path)
+                print(f"ERROR {path} :: {type(e).__name__}: {str(e)[:160]}", flush=True)
 
-print(f"\n=== PASS {len(results['pass'])} FAIL {len(results['fail'])} NOFORM {len(results['noform'])} ===")
-print(f"\n=== NOFORM ({len(results['noform'])}) ===")
-for p, m in results["noform"]:
-    print("N", p, "|", m)
+    print("\n=== SUMMARY ===")
+    for k, v in results.items():
+        print(f"{k}: {len(v)}")
+
+
+if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    main(sys.argv[1:])

@@ -2,7 +2,7 @@
 harness outside pytest, one line per case, so new directories can be
 swept quickly before being added to tests/test_ztests.py.
 
-Usage: python tools/ztest_triage.py DIR_OR_YAML [...]
+Usage: python scripts/ztest_triage.py DIR_OR_YAML [...]
 """
 import glob
 import importlib.util

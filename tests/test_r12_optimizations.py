@@ -68,6 +68,23 @@ def test_shape_groups_repeated_reads_bounded(spark, tmp_path):
     assert _persistent_rdd_count(spark) <= base
 
 
+def _window_form_spans(df, n=5, min_count=2, text_col="text", id_col="doc_id"):
+    """Equality oracle: the round-11 span detection, which counts each
+    gram corpus-wide with a window over its hash — one scan, one
+    shuffle of every (id, pos, gh), and a hot gram in ONE task."""
+    from pyspark.sql import Window
+
+    from zed_spark.textops import spans as sp
+
+    pg = sp._positional_gram_hashes(df, n=n, text_col=text_col, id_col=id_col)
+    hits = (
+        pg.withColumn("cnt", F.count(F.lit(1)).over(Window.partitionBy("gh")))
+        .where(F.col("cnt") >= min_count)
+        .select(id_col, "pos")
+    )
+    return sp._spans_from_hits(hits, n, id_col)
+
+
 def test_duplicated_spans_join_form_equals_window_form(spark, monkeypatch):
     """The round-12 two-level-count + semi-join span detection is
     output-identical to the round-11 window form (the skew-safe plan
@@ -83,31 +100,29 @@ def test_duplicated_spans_join_form_equals_window_form(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def run(form: str):
-        monkeypatch.setenv("SPARK_GRAFT_SPANS_COUNT", form)
-        out = sp.duplicated_spans(df, n=3, min_count=2)
-        return {tuple(r) for r in out.collect()}
+    def spans(fn):
+        return {tuple(r) for r in fn(df, n=3, min_count=2).collect()}
 
-    assert run("join") == run("window")
-    assert len(run("join")) > 0
+    assert spans(sp.duplicated_spans) == spans(_window_form_spans)
+    assert len(spans(sp.duplicated_spans)) > 0
 
     # strip path inherits the same detection
-    def strip(form: str):
-        monkeypatch.setenv("SPARK_GRAFT_SPANS_COUNT", form)
+    def strip():
         out = sp.strip_duplicated_spans(df, n=3, min_count=2)
         return {tuple(r) for r in out.collect()}
 
-    assert strip("join") == strip("window")
+    joined = strip()
+    monkeypatch.setattr(sp, "duplicated_spans", _window_form_spans)
+    assert joined == strip()
 
 
-def test_duplicated_spans_join_form_plan_shape(spark, monkeypatch):
+def test_duplicated_spans_join_form_plan_shape(spark):
     """Scale pin (round-11 VERDICT item 4): the gram count must run a
     PARTIAL aggregation before its exchange (hot grams collapse
     map-side) and attach back via a join — window-over-gh, which gets
-    no AQE skew handling, must be gone from the default plan."""
+    no AQE skew handling, must be gone from the plan."""
     from zed_spark.textops import spans as sp
 
-    monkeypatch.delenv("SPARK_GRAFT_SPANS_COUNT", raising=False)
     df = spark.createDataFrame(
         [(i, "a b c d e f") for i in range(10)], "doc_id long, text string"
     )

@@ -536,3 +536,62 @@ def test_service_on_file_uri_lake_root(spark, tmp_path_factory):
         assert [r["a"] for r in rows] == [1, 2]
     finally:
         s.stop()
+
+
+@pytest.mark.parametrize(
+    "query", ["from t | shape {b:int64, a:string}", "from t | crop {a:int64}"]
+)
+def test_compile_accepts_shaping_ops(spark, query):
+    """POST /compile parses with the same parser as /query, so the
+    shaping operators /query runs also compile."""
+    s = QueryService(spark, sf_dir=SF_DIR)
+    code, ctype, body = s.handle_api(
+        "POST", "/compile", {}, {}, json.dumps({"query": query}).encode()
+    )
+    assert code == 200 and ctype == "application/json"
+    ops = json.loads(body)
+    assert ops[1]["k"] == "Shaper" and ops[1]["op"] == query.split()[3]
+
+
+def test_compile_syntax_error_400(spark):
+    s = QueryService(spark, sf_dir=SF_DIR)
+    code, _ctype, body = s.handle_api(
+        "POST", "/compile", {}, {}, json.dumps({"query": "where )"}).encode()
+    )
+    err = json.loads(body)
+    assert code == 400 and err["compilation_errors"][0]["Pos"] == 6
+
+
+def test_ctrl_channels_per_fork_output(svc):
+    """`?ctrl=true` zjson answers open one QueryChannelSet per output
+    channel of the query."""
+    q = "from events | fork (=> head 1 | output main => head 2 | output other)"
+    req = urllib.request.Request(
+        f"{svc}/query?ctrl=true", data=json.dumps({"query": q}).encode(),
+        method="POST", headers={"Accept": "application/x-zjson"},
+    )
+    with urllib.request.urlopen(req) as resp:
+        frames = [json.loads(ln) for ln in resp.read().decode().splitlines() if ln]
+    opened = [
+        f["value"]["channel"] for f in frames
+        if f.get("type") == "QueryChannelSet"
+    ]
+    assert opened == ["main", "other"]
+
+
+def test_requests_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
+    """Rendering an answer in each format and ingesting a ZSON body
+    leave no svc_* directory behind."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    s = QueryService(spark, sf_dir=SF_DIR)
+    df = spark.range(0, 3).select(F.col("id").alias("a"))
+    for fmt in ("json", "ndjson", "csv", "tsv", "zson", "zjson", "arrows",
+                "parquet", "zng", "vng"):
+        assert s._render(df, fmt)
+    assert s._load_body(b"{a:1}\n{a:2}\n", "", {}).count() == 2
+    assert s._load_body(b"{a:1}\n", "application/x-zson", {}).count() == 1
+    assert not list(tmp_path.glob("svc_*"))

@@ -7,6 +7,14 @@ reference CLI runs unchanged against Spark:
 
     z.query("from events | value > 100 | count() by event_type | sort -r count")
 
+One parser reads query text (`parser.py`). The pipeline is
+
+    text --parse_ast--> dict AST --lower--> tuple AST --> Compiler
+
+The dict AST has the reference `ast` shape; `POST /compile` returns it
+and the zfmt printers format it. `lower` turns it into the tuples the
+compiler consumes; `parse(text)` runs both steps.
+
 Supported: from, where (+ implied where / bare search terms), cut,
 put (+ bare assignments), drop, rename, summarize (implied by agg
 calls) with `by` keys and `every(dur)`, sort [-r], head, tail, top,

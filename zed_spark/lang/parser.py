@@ -1,1523 +1,1688 @@
-"""Recursive-descent parser for the zed-language subset.
+"""The zed query-language parser: the engine's one reader of query text.
 
-Produces a plain-tuple AST:
-  pipeline: list of op nodes
-  op nodes: ('from',name) ('where',e) ('search',term) ('cut',[(path,alias)])
+Query text goes through two steps before the compiler sees it:
+
+    text --parse_ast--> dict AST --lower--> tuple AST --> Compiler
+
+`parse_ast` is a recursive-descent parser over the lexer's tokens. It
+emits dicts `{"k": kind, ...}` shaped like the reference's `ast`
+package (compiler/parser/parser.peg, ast/ast.go). That AST is what
+`POST /compile` returns and what the zfmt printers format, so it keeps
+surface detail: literal text, implied versus explicit counts, search
+terms.
+
+`lower` is one pass over that AST. It does the semantic work the
+compiler relies on and emits the plain-tuple AST `Compiler` consumes:
+
+  pipeline: op nodes, led by ('decls', funcs, consts, user_ops, types)
+            when the query declares anything
+  op nodes: ('from',name[,fmt]) ('where',e) ('search',term) ('cut',[..])
             ('put',[(path,e)]) ('drop',[path]) ('rename',[(new,old)])
-            ('summarize',[aggs],[keys],every) ('sort',keys,desc)
+            ('summarize',[aggs],[keys],every) ('sort',keys,desc,nulls)
             ('head',n) ('tail',n) ('top',n,[k]) ('uniq',count) ('fuse',)
-            ('yield',[e]) ('over',e) ('join',kind,lk,rk,[cut],subquery)
+            ('yield',[e]) ('over',e,with,body) ('join',kind,lk,rk,cut,sub)
+            ('scope',ops,consts,funcs) ('opcall',name,args) ...
   exprs:    ('num',v) ('str',s) ('bool',b) ('null',) ('time',s) ('dur',s)
             ('field',[parts]) ('this',) ('bin',op,l,r) ('un',op,e)
             ('call',name,[args]) ('cond',c,t,f) ('index',e,i)
             ('slice',e,lo,hi) ('record',[(n,e)]) ('array',[e]) ('in',l,r)
 
-Grammar reference: compiler/parser/parser.peg (semantics only — this
-is an independent implementation of a subset).
+Lowering owns per-scope declarations ('symbol redefined'), the const
+variable-dependency check, head/tail count folding and user-op call
+resolution. `parse(text)` is `lower(parse_ast(text))`.
 """
 
 from __future__ import annotations
 
+import json
+import operator
+import re
+
 from zed_spark.lang.lexer import Token, tokenize
 
-
-_SENTINEL = object()
-
-
-def _const_dep_check(
-    e, consts: dict, funcs: dict, name: str, types: dict | None = None
-) -> None:
-    """const bodies must be data-independent (semantic/op.go: 'const
-    ... cannot have variable dependency'): field/this references are
-    rejected unless the name is a previously declared const — or a
-    declared named TYPE, which reads as a type value (expr/ztests/
-    type-map: const schemas = |{"conn": conn, ...}|)."""
-    if not isinstance(e, tuple):
-        return
-    if e[0] == "this" or (
-        e[0] == "field" and e[1] and ".".join(e[1]) not in consts
-        and e[1][0] not in consts
-        and e[1][0] not in (types or {})
-    ):
-        raise ValueError(
-            f'const "{name}" cannot have variable dependency'
-        )
-    for sub in e[1:]:
-        if isinstance(sub, tuple):
-            _const_dep_check(sub, consts, funcs, name, types)
-        elif isinstance(sub, list):
-            for x in sub:
-                if isinstance(x, tuple):
-                    _const_dep_check(x, consts, funcs, name, types)
-
+# aggregate functions the compiler implements (implied summarize)
 AGG_FNS = {
     "count", "sum", "avg", "min", "max", "any", "dcount", "collect",
     "union", "and", "or", "collect_map", "fuse",
 }
 
-_KEYWORDS = {
-    "from", "where", "cut", "put", "drop", "rename", "summarize", "sort",
-    "head", "tail", "top", "uniq", "fuse", "yield", "over", "join", "by",
-    "on", "kind", "and", "or", "not", "in", "this", "true", "false", "null",
-    "every", "pass", "filter",
+# names the printers treat as aggregate calls (zfmt isAggFunc)
+_AGG_NAMES = AGG_FNS | {"countdistinct", "first", "last"}
+
+# shaping operators with an inline type argument: `shape {a:int64}`
+_SHAPERS = {"shape", "cast", "crop", "fit", "order", "fill"}
+
+_OP_KEYWORDS = _SHAPERS | {
+    "from", "file", "get", "where", "filter", "search", "cut", "drop",
+    "put", "rename", "summarize", "sort", "head", "tail", "top", "uniq",
+    "fuse", "yield", "over", "join", "switch", "fork", "merge", "pass",
+    "output", "debug", "load", "assert", "explode", "by", "inner",
+    "left", "right", "anti",
 }
 
+# tokens that, right after a search term, make it an expression
+_EXPR_FOLLOW = {
+    "==", "!=", "<", "<=", ">", ">=", "in", "+", "-", "/", "%", "*",
+    "?", ":=", "=",
+}
 
-class Parser:
+_NET_RE = re.compile(r"[\d.]+/\d+|[0-9a-fA-F:]*:[0-9a-fA-F:]*/\d+")
+
+_URL_OR_QUOTED = re.compile(
+    r"\"(?:\\.|[^\"\\])*\"?|'(?:\\.|[^'\\])*'?|https?://[^\s|)]*"
+)
+
+
+def _mask_urls(src: str) -> str:
+    """Replace bare (unquoted) http(s)://... runs with a same-length
+    identifier so the lexer doesn't read `//` as a comment; _pattern
+    slices the ORIGINAL source text back out by token position."""
+    return _URL_OR_QUOTED.sub(
+        lambda m: m[0] if m[0][0] in "\"'" else "U" * len(m[0]), src
+    )
+
+
+def _assign(lhs, rhs) -> dict:
+    return {"k": "Assign", "lhs": lhs, "rhs": rhs}
+
+
+class _Parser:
+    """Recursive descent over the token stream, emitting the dict AST."""
+
     def __init__(self, src: str):
         self.src = src
-        self.toks = tokenize(src)
+        self.toks = tokenize(_mask_urls(src))
         self.i = 0
-        # decl accumulators — every lexical scope (`( ... )` body)
-        # may open with func/const/op/type decls (statements.md);
-        # they accumulate here and parse() emits one decls node
-        self.funcs: dict[str, tuple[list[str], tuple]] = {}
-        self.consts: dict[str, tuple] = {}
-        self.user_ops: dict[str, tuple[list[str], list[tuple]]] = {}
-        self.types: dict[str, tuple] = {}
-        self.user_op_names: set[str] = set()
-        # names declared in each open lexical scope — redefinition
-        # within ONE scope is an error (semantic/op.go 'symbol
-        # redefined'); an inner scope may shadow an outer name
-        self._scope_decls: list[set[str]] = [set()]
+        # inside a from-block trunk, a bare file/get/pool keyword
+        # starts the NEXT trunk (parser.peg from-block scoping)
+        self.trunk_depth = 0
+        self.terms = 0  # search terms seen by the current search()
 
-    # --- token helpers ----------------------------------------------
+    # --- token helpers
     def peek(self, k: int = 0) -> Token:
         return self.toks[min(self.i + k, len(self.toks) - 1)]
 
     def next(self) -> Token:
         t = self.toks[self.i]
-        self.i += 1
+        if t.kind != "EOF":
+            self.i += 1
         return t
 
-    def accept(self, text: str) -> bool:
-        if self.peek().text == text:
-            self.i += 1
+    def at(self, text: str) -> bool:
+        return self.peek().text == text and self.peek().kind in ("OP", "ID")
+
+    def eat(self, text: str) -> bool:
+        if self.at(text):
+            self.next()
             return True
         return False
 
     def expect(self, text: str) -> Token:
         t = self.next()
-        if t.text != text:
+        if t.text != text or t.kind not in ("OP", "ID"):
             raise SyntaxError(f"expected {text!r}, got {t.text!r} at {t.pos}")
         return t
 
-    def _const_int(self, e: tuple) -> int:
-        """Fold a constant integer expression (head/tail counts)."""
-        if e[0] == "num":
-            return int(e[1])
-        if e[0] == "bin" and e[1] in ("+", "-", "*", "%", "/"):
-            lo, hi = self._const_int(e[2]), self._const_int(e[3])
-            import operator as _op
+    def done(self) -> bool:
+        return self.peek().kind == "EOF"
 
-            f = {
-                "+": _op.add, "-": _op.sub, "*": _op.mul,
-                "%": _op.mod, "/": _op.floordiv,
-            }[e[1]]
-            return int(f(lo, hi))
-        if e[0] == "un" and e[1] == "-":
-            return -self._const_int(e[2])
-        raise SyntaxError(f"expected a constant count, got {e!r}")
+    def listed(self, item, close: str | None = None) -> list:
+        """`item (, item)*`; given `close`, a possibly empty list that
+        the closing token ends."""
+        out = []
+        if close is None or not self.at(close):
+            out.append(item())
+            while self.eat(","):
+                out.append(item())
+        if close is not None:
+            self.expect(close)
+        return out
 
-    def at_end_of_op(self) -> bool:
+    def _at_op_end(self) -> bool:
         t = self.peek()
-        return (
-            t.text in ("|", ")", "=>", "")
-            or t.kind == "EOF"
-            or t.text in getattr(self, "stop_words", ())
+        if t.kind == "ID":
+            return t.text in ("case", "default") or (
+                self.trunk_depth > 0 and t.text in ("file", "get", "pool")
+            )
+        return t.kind == "EOF" or t.text in ("|", ")", "=>")
+
+    # --- sequences and declarations
+    def parse(self) -> list:
+        seq = self.seq()
+        if not self.done():
+            t = self.peek()
+            raise SyntaxError(f"trailing input at {t.pos}: {t.text!r}")
+        return seq
+
+    def seq(self) -> list:
+        """Ops joined by `|`. Declarations may open the sequence or
+        follow any pipe; they wrap the ops after them in a Scope."""
+        decls = self.decls()
+        ops = self._piped([self.op()])
+        if decls:
+            return [{"k": "Scope", "decls": decls, "body": ops}]
+        return ops
+
+    def branch_seq(self) -> list:
+        """A fork/switch leg or from-trunk."""
+        return self.seq() if self._at_decl() else self._piped([self.op()])
+
+    def _piped(self, ops: list) -> list:
+        """Append the ops after each pipe to ops."""
+        while self.eat("|") or self.eat("|>"):
+            if self._at_decl():
+                ops.append(self.seq()[0])
+                break
+            ops.append(self.op())
+        return ops
+
+    def _at_decl(self) -> bool:
+        t = self.peek()
+        if t.kind != "ID" or self.peek(1).kind != "ID":
+            return False
+        return t.text in ("const", "func", "op") or (
+            t.text == "type" and self.peek(2).text == "="
         )
 
-    # --- pipeline ----------------------------------------------------
-    def parse_pipeline(self) -> list[tuple]:
-        self.parse_decls()
-        ops = [self.parse_op()]
-        while self.accept("|") or self.accept("|>"):
-            self.parse_decls()
-            ops.append(self.parse_op())
-        return ops
+    def decls(self) -> list:
+        out = []
+        while self._at_decl():
+            word, name = self.next().text, self.next().text
+            if word in ("const", "type"):
+                self.expect("=")
+                out.append((word, name, self.expr() if word == "const" else self.type_text()))
+                continue
+            self.expect("(")
+            params = self.listed(lambda: self.next().text, ")")
+            self.expect(":")
+            self.expect("(")
+            body = self.expr() if word == "func" else self.seq()
+            self.expect(")")
+            out.append((word, name, params, body))
+        return out
+
+    def type_text(self) -> str:
+        """Consume a type expression, returning its raw source text."""
+        start = self.peek().pos
+        self.type_expr()
+        end = self.toks[self.i - 1]
+        return self.src[start : end.pos + len(end.text)]
+
+    def type_expr(self) -> tuple:
+        """Type syntax: primitive or named ref, [elem] array, |[elem]|
+        set, |{key:val}| map, (a,b) union, {field:type,...} record."""
+        t = self.next()
+        if t.text == "[":
+            inner = self.type_expr()
+            self.expect("]")
+            return ("array", inner)
+        if t.text == "|":
+            if self.eat("["):
+                inner = self.type_expr()
+                self.expect("]")
+                self.expect("|")
+                return ("settype", inner)
+            self.expect("{")
+            kt = self.type_expr()
+            self.expect(":")
+            vt = self.type_expr()
+            self.expect("}")
+            self.expect("|")
+            return ("maptype", kt, vt)
+        if t.text == "(":
+            return ("uniontype", self.listed(self.type_expr, ")"))
+        if t.text == "{":
+            def field():
+                name = self.next().text
+                self.expect(":")
+                return (name, self.type_expr())
+
+            return ("recordtype", self.listed(field, "}"))
+        if self.at("=") and self.peek(1).text != "=":
+            # inline named-type definition `port=uint16` inside a type
+            # expression (zson.md named types) — names widen to the
+            # underlying type in this model (SURVEY §1.2)
+            self.next()
+            return self.type_expr()
+        return ("prim", t.text)
+
+    # --- operators
+    def op(self) -> dict:
+        t = self.peek()
+        if t.kind == "ID" and t.text in _OP_KEYWORDS:
+            node = getattr(self, "op_" + t.text)()
+            if node is not None:
+                return node
+        if t.text == "(" and t.kind == "OP":
+            # parenthesized scoped sub-sequence; without declarations
+            # it may also be a parenthesized search expression
+            save = self.i
+            self.next()
+            decls = self._at_decl()
+            try:
+                body = self.seq()
+                self.expect(")")
+                if decls or self._at_op_end():
+                    if len(body) == 1 and body[0]["k"] == "Scope" and not body[0]["decls"]:
+                        return body[0]  # ((...)) is one scope
+                    return {"k": "Scope", "decls": [], "body": body}
+            except SyntaxError:
+                if decls:
+                    raise
+            self.i = save
+        return self.op_expr()
+
+    def op_from(self) -> dict:
+        self.next()
+        if self.eat("("):
+            trunks = []
+            while not self.eat(")"):
+                src = self.source()
+                sub = None
+                if self.eat("=>"):
+                    self.trunk_depth += 1
+                    sub = self.branch_seq()
+                    self.trunk_depth -= 1
+                trunks.append((src, sub))
+            return {"k": "From", "trunks": trunks}
+        node = self.pool_source()
+        if self.at("format") and self.peek(1).kind in ("ID", "STR"):
+            # `from x.zson format json` — explicit input format
+            self.next()
+            node["format"] = self.next().text.strip('"')
+        return node
+
+    def source(self) -> dict:
+        t = self.peek()
+        if t.text in ("file", "get"):
+            return getattr(self, "op_" + t.text)()
+        if t.text in ("pool", "from"):
+            self.next()
+        return self.pool_source()
+
+    def _pattern(self, stops: tuple = ()):
+        """A source pattern: quoted string, glob, regexp, or a run of
+        ADJACENT tokens (no intervening whitespace) sliced raw from
+        the source so URLs like http://host/path stay intact.  Pools
+        pass stops=("@", ":") so name@commit:meta splits."""
+        t = self.peek()
+        if t.kind in ("STR", "REGEX"):
+            self.next()
+            return ("string" if t.kind == "STR" else "regexp", t.text[1:-1])
+        start = end = t.pos
+        while not self.done():
+            t = self.peek()
+            if end != start and (t.pos != end or (t.kind == "OP" and t.text in stops)):
+                break  # whitespace gap or a stop token ends the pattern
+            if t.kind == "OP" and t.text in ("|", ")", "=>"):
+                break
+            self.next()
+            end = t.pos + len(t.text)
+        text = self.src[start:end]
+        if not text:
+            t = self.peek()
+            raise SyntaxError(f"unexpected token {t.text!r} at {t.pos}")
+        return ("glob" if "*" in text else "string", text)
+
+    def pool_source(self) -> dict:
+        pat = self._pattern(stops=("@", ":"))
+        commit = self._pattern(stops=(":",))[1] if self.eat("@") else ""
+        meta = ""
+        if self.at(":") and self.peek(1).kind == "ID":
+            self.next()
+            meta = self.next().text
+        return {"k": "Pool", "pool": pat, "commit": commit, "meta": meta}
+
+    def op_file(self) -> dict:
+        self.next()
+        pat = self._pattern()
+        fmt = self.next().text if self.eat("format") else ""
+        return {"k": "File", "path": pat, "format": fmt}
+
+    def op_get(self) -> dict:
+        self.next()
+        node = {"k": "HTTP", "url": self._pattern(), "format": "",
+                "method": "", "headers": None, "body": ""}
+        while self.peek().kind == "ID" and self.peek().text in node:
+            key = self.next().text
+            if key == "headers":
+                node[key] = self.expr()
+                continue
+            t = self.next()
+            strip = t.kind == "STR" and key != "format"
+            node[key] = t.text[1:-1] if strip else t.text
+        return node
+
+    def op_where(self) -> dict:
+        self.next()
+        return {"k": "Where", "expr": self.expr()}
+
+    op_filter = op_where  # `filter` is the reference's alias for where
+
+    def op_search(self) -> dict:
+        self.next()
+        return {"k": "Search", "expr": self.search()}
+
+    def op_assert(self) -> dict:
+        self.next()
+        start = self.peek().pos
+        e = self.expr()
+        # the raw expression text rides along: a failing row's error
+        # carries it (op/assert.go: {message, expr, on})
+        text = self.src[start : self.peek().pos].strip()
+        return {"k": "Assert", "expr": e, "text": text}
+
+    def op_cut(self) -> dict:
+        self.next()
+        return {"k": "Cut", "args": self.assignments()}
+
+    def op_drop(self) -> dict:
+        self.next()
+        return {"k": "Drop", "args": self.listed(self.expr)}
+
+    def op_put(self) -> dict:
+        kind = self.next().text.capitalize()
+        return {"k": kind, "args": self.listed(lambda: self.assignment(True))}
+
+    op_rename = op_put
+
+    def op_summarize(self) -> dict:
+        self.next()
+        return self._summarize(self.assignments())
+
+    def op_by(self) -> dict:
+        # `by key,...` — summarize shorthand for distinct keys
+        self.next()
+        return self._summarize([], by=True)
+
+    def _summarize(self, aggs: list, by: bool = False) -> dict:
+        keys = self.assignments() if by or self.eat("by") else []
+        return self._limit(
+            {"k": "Summarize", "aggs": aggs, "keys": keys, "limit": 0}
+        )
+
+    def _limit(self, node: dict) -> dict:
+        if self.at("with") and self.peek(1).text == "-":
+            # `with -limit N` tunes the reference's partials spill
+            # threshold (groupby.go); Spark's HashAggregate owns
+            # partial/final decomposition, so it is parsed and kept
+            self.next()
+            self.next()
+            self.expect("limit")
+            node["limit"] = int(self.next().text)
+        return node
+
+    def op_sort(self) -> dict:
+        self.next()
+        rev, nulls = False, ""
+        while self.eat("-"):
+            flag = self.next().text
+            if flag == "r":
+                rev = True
+            elif flag == "nulls":
+                nulls = self.next().text
+                if nulls not in ("first", "last"):
+                    raise SyntaxError(
+                        f"sort -nulls: expected first|last, got {nulls!r}"
+                    )
+            else:
+                raise SyntaxError(f"unknown sort flag -{flag}")
+
+        def key():
+            e = self.expr()
+            t = self.peek()
+            order = self.next().text if t.kind == "ID" and t.text in ("asc", "desc") else None
+            return (e, order)
+
+        args = [] if self._at_op_end() else self.listed(key)
+        node = {"k": "Sort", "reverse": rev, "nullsfirst": nulls == "first",
+                "args": args}
+        if nulls == "last":
+            node["nulls"] = nulls
+        return node
+
+    def op_head(self) -> dict:
+        kind = self.next().text.capitalize()
+        return {"k": kind, "count": None if self._at_op_end() else self.expr()}
+
+    op_tail = op_head
+
+    def op_top(self) -> dict:
+        self.next()
+        t = self.next()
+        if t.kind != "NUM":
+            raise SyntaxError(f"top: expected a count, got {t.text!r} at {t.pos}")
+        return {"k": "Top", "limit": int(t.text), "flush": False,
+                "args": self.listed(self.expr)}
+
+    def op_uniq(self) -> dict:
+        self.next()
+        c = self.eat("-")
+        if c and self.next().text != "c":
+            raise SyntaxError("unknown uniq flag")
+        return {"k": "Uniq", "c": c}
+
+    def op_fuse(self):
+        if self.peek(1).text == "(":
+            return None  # fuse(e) is the aggregate form (agg/fuse.go)
+        self.next()
+        return {"k": "Fuse"}
+
+    def op_pass(self) -> dict:
+        self.next()
+        return {"k": "Pass"}
+
+    def op_yield(self) -> dict:
+        self.next()
+        return {"k": "Yield", "exprs": self.listed(self.expr)}
+
+    def op_output(self):
+        # `output <name>` names the fork leg's channel
+        if self.peek(1).kind != "ID":
+            return None
+        self.next()
+        return {"k": "Output", "name": self.next().text}
+
+    def op_debug(self) -> dict:
+        self.next()
+        return {"k": "Debug", "expr": None if self._at_op_end() else self.expr()}
+
+    def op_merge(self) -> dict:
+        self.next()
+        exprs = self.listed(self.expr)
+        node = {"k": "Merge", "expr": exprs[0]}
+        if len(exprs) > 1:
+            node["exprs"] = exprs
+        return node
+
+    def op_load(self) -> dict:
+        # terminal lake write: load pool[@branch] [author "a"]
+        # [message "m"] [meta "x"] (docs/language/operators/load.md)
+        self.next()
+        t = self.next()
+        ref = t.text[1:-1] if t.kind == "STR" else t.text
+        while t.kind != "STR" and not self._at_op_end() and (
+            self.peek().text in (".", "/", "-", "@", ":")
+            or self.peek().kind in ("ID", "NUM")
+        ) and self.peek().text not in ("author", "message", "meta"):
+            ref += self.next().text
+        pool, _, branch = ref.partition("@")
+        node = {"k": "Load", "pool": pool, "branch": branch, "author": "",
+                "message": "", "meta": ""}
+        while self.peek().kind == "ID" and self.peek().text in (
+            "author", "message", "meta",
+        ):
+            which, tok = self.next().text, self.next()
+            if tok.kind != "STR":
+                raise SyntaxError(
+                    f"load: {which} requires a quoted string, got {tok.text!r}"
+                )
+            node[which] = tok.text[1:-1]
+        return node
+
+    def op_over(self) -> dict:
+        self.next()
+        exprs = self.listed(self.expr)
+
+        def local():
+            # bare `with b` is shorthand for b=b (over.md)
+            name = self.next().text
+            return (name, self.expr() if self.eat("=") else {"k": "ID", "name": name})
+
+        locals_ = self.listed(local) if self.eat("with") else []
+        body = None
+        if self.eat("=>"):
+            self.expect("(")
+            body = self.seq()
+            self.expect(")")
+        return {"k": "Over", "exprs": exprs, "locals": locals_, "body": body}
+
+    def op_fork(self) -> dict:
+        self.next()
+        self.expect("(")
+        paths = []
+        while self.eat("=>"):
+            paths.append(self.branch_seq())
+        self.expect(")")
+        return {"k": "Parallel", "paths": paths}
+
+    def op_switch(self) -> dict:
+        self.next()
+        expr = None
+        if not self.at("("):
+            # `switch x ( case ...` — a path directly before the case
+            # block is the selector, not a call
+            path = self.peek().kind == "ID" and not (
+                self.peek(1).text == "("
+                and self.peek(2).text not in ("case", "default")
+            )
+            expr = self.postfix_expr(calls=False) if path else self.expr()
+        self.expect("(")
+        cases = []
+        while self.at("case") or self.at("default"):
+            ce = _to_search(self.expr()) if self.next().text == "case" else None
+            self.expect("=>")
+            cases.append((ce, self.branch_seq()))
+        self.expect(")")
+        return {"k": "Switch", "expr": expr, "cases": cases}
+
+    def op_inner(self):
+        if self.peek(1).text != "join":
+            return None
+        return self.op_join(self.next().text)
+
+    op_left = op_right = op_anti = op_inner
 
     def _paren_then_on(self, k: int) -> bool:
         """Lookahead: does the paren group starting at offset k close
         with `on` right after? (join-operator vs join-function)"""
         depth = 0
-        i = k
-        while True:
-            t = self.peek(i)
-            if t.kind == "EOF":
-                return False
-            if t.text == "(":
-                depth += 1
-            elif t.text == ")":
-                depth -= 1
-                if depth == 0:
-                    return self.peek(i + 1).text == "on"
-            i += 1
+        while self.peek(k).kind != "EOF":
+            t = self.peek(k)
+            depth += {"(": 1, ")": -1}.get(t.text, 0)
+            if t.text == ")" and depth == 0:
+                return self.peek(k + 1).text == "on"
+            k += 1
+        return False
 
-    def _declare(self, name: str) -> None:
-        scope = self._scope_decls[-1]
-        if name in scope:
-            raise ValueError(f'symbol "{name}" redefined')
-        scope.add(name)
-
-    def parse_decls(self) -> None:
-        """Leading func/const/op/type decls of a scope (reference
-        semantic/op.go TypeDecl/OpDecl/FuncDecl; statements.md).
-        Scope-local names are hoisted to the query level — the zed
-        shadowing rules are stricter, but hoisting is sound for
-        non-colliding names (the common case)."""
-        p = self
-        while p.peek().text in ("func", "const", "op", "type"):
-            if p.peek().text == "type":
-                p.next()
-                name = p.next().text
-                if name in p.types:
-                    # the reference rejects redefinition in one scope
-                    # (semantic/scope.go; const-redefined-error)
-                    raise SyntaxError(f'symbol "{name}" redefined')
-                p.expect("=")
-                p.types[name] = p.parse_type_expr()
-                continue
-            if p.peek().text == "op":
-                # op name(params): ( seq ) — user macro pipeline
-                # (reference OpDecl, semantic/op.go:857)
-                p.next()
-                name = p.next().text
-                p.user_op_names.add(name)
-                p.expect("(")
-                params = []
-                if p.peek().text != ")":
-                    params.append(p.next().text)
-                    while p.accept(","):
-                        params.append(p.next().text)
-                p.expect(")")
-                p.expect(":")
-                p.expect("(")
-                body = p.parse_pipeline()
-                p.expect(")")
-                p.user_ops[name] = (params, body)
-                continue
-            if p.peek().text == "func":
-                p.next()
-                name = p.next().text
-                p.expect("(")
-                params = []
-                if p.peek().text != ")":
-                    params.append(p.next().text)
-                    while p.accept(","):
-                        params.append(p.next().text)
-                p.expect(")")
-                p.expect(":")
-                p.expect("(")
-                body = p.parse_expr()
-                p.expect(")")
-                p._declare(name)
-                p.funcs[name] = (params, body)
-            else:
-                p.next()
-                name = p.next().text
-                p.expect("=")
-                e = p.parse_expr()
-                _const_dep_check(e, p.consts, p.funcs, name, p.types)
-                p._declare(name)
-                p.consts[name] = e
-
-    def parse_op(self) -> tuple:
-        t = self.peek()
-        word = t.text
-        if word == "(" and self.peek(1).text in ("const", "func", "op", "type"):
-            # parenthesized lexical scope with local decls
-            # (compiler/ztests/const-redefined-scope, nested-const):
-            # inner const/func names shadow the outer scope and are
-            # restored at the closing paren
-            self.next()
-            saved_c, saved_f = dict(self.consts), dict(self.funcs)
-            self._scope_decls.append(set())
-            ops = self.parse_pipeline()
-            self._scope_decls.pop()
+    def op_join(self, style: str = ""):
+        if not style and self.peek(1).text == "(" and not self._paren_then_on(1):
+            return None  # join(arr, sep) is the string function
+        self.expect("join")
+        if self.eat("kind"):
+            self.expect("=")
+            style = self.next().text
+        right = None
+        if self.eat("("):
+            right = self.seq()
             self.expect(")")
-            local_c = {
-                k: v
-                for k, v in self.consts.items()
-                if saved_c.get(k, _SENTINEL) is not v
-            }
-            local_f = {
-                k: v
-                for k, v in self.funcs.items()
-                if saved_f.get(k, _SENTINEL) is not v
-            }
-            self.consts.clear()
-            self.consts.update(saved_c)
-            self.funcs.clear()
-            self.funcs.update(saved_f)
-            return ("scope", ops, local_c, local_f)
-        if word == "from" and self.peek(1).text == "(":
-            # multi-source from: `from ( file a file b ) | join ...`
-            # — each source is a parallel leg (compiler/parser.peg
-            # from with multiple sources); a downstream join consumes
-            # the two legs, anything else sees their combination
-            self.next()
-            self.expect("(")
-            legs: list[tuple] = []
-            while self.peek().text != ")":
-                if self.peek().text == "pass":
-                    # `pass` leg: the incoming stream joins the
-                    # combination (compiler/ztests/from-pass)
-                    self.next()
-                    src = None
-                else:
-                    if self.peek().text in ("file", "from", "pool"):
-                        # `pool X` legs are the lake's multi-pool
-                        # from-block form (lake/ztests/cross-pool-join)
-                        self.next()
-                    src = self.parse_source_name()
-                sub = None
-                if self.accept("=>"):
-                    # per-source sub-pipeline leg
-                    # (compiler/ztests/const-from, fork-from)
-                    sub = self.parse_pipeline()
-                legs.append((src, sub))
-            self.expect(")")
-            return ("frommulti", legs)
-        if word == "from" or (word == "file" and self.peek(1).kind in ("ID", "NUM")):
-            # `file x.zson` is the reference's file-source form
-            # (used inside join subqueries and at pipeline heads)
-            self.next()
-            name = self.parse_source_name()
-            if self.peek().text == "format" and self.peek(1).kind in (
-                "ID", "STR"
-            ):
-                # `file in.csv format csv` — explicit input format
-                # (compiler/ztests/from-file-format)
-                self.next()
-                fmt = self.next()
-                return ("from", name, fmt.text.strip('"'))
-            return ("from", name)
-        if word == "pass":
-            self.next()
-            return ("pass",)
-        if word == "sample" and (
-            self.peek(1).kind == "EOF"
-            or self.peek(1).text in ("|", ")", "=>")
+        self.expect("on")
+        lk = self.expr()
+        rk = self.expr() if self.eat("=") else None
+        args = None if self._at_op_end() else self.assignments()
+        return {"k": "Join", "style": style, "right": right, "lk": lk,
+                "rk": rk, "args": args}
+
+    def op_explode(self) -> dict:
+        # explode <expr-list> by <type> [as <path>]
+        # (runtime/sam/op/explode/explode.go)
+        self.next()
+        args = self.listed(self.expr)
+        self.expect("by")
+        ty = self.type_text()
+        path = self.postfix_expr(calls=False) if self.eat("as") else None
+        return {"k": "Explode", "args": args, "type": ty, "as": path}
+
+    def op_shape(self):
+        """`shape {a:int64}` and its siblings; the words stay usable
+        as field names (`order := 5`) and calls (`cast(v, t)`)."""
+        nxt = self.peek(1)
+        if nxt.text in ("{", "[") or (
+            nxt.kind == "ID" and self.peek(2).text not in (":=", "(", ".")
         ):
-            # bare `sample`: one exemplar per value SHAPE
-            # (op/sample; docs/language/operators/sample.md)
-            self.next()
-            return ("sample",)
-        if word == "output":
-            # `output <name>` names the fork leg's channel
-            # (reference dag.Output; used by describe and -split)
-            if self.peek(1).kind == "ID":
-                self.next()
-                return ("outputop", self.next().text)
-        if word == "by":
-            # `by key,...` — summarize shorthand for distinct keys
-            self.next()
-            keys, every = [], None
-            while True:
-                k = self.parse_key()
-                if k[0] == "every":
-                    every = k[1]
-                else:
-                    keys.append(k)
-                if not self.accept(","):
-                    break
-            return ("summarize", [], keys, every)
-        if word in ("where", "filter"):
-            # `filter` is the reference's alias for where
-            self.next()
-            return ("where", self.parse_expr())
-        if word == "assert":
-            self.next()
-            start = self.peek().pos
-            e = self.parse_expr()
-            end = self.peek().pos if self.i < len(self.toks) else len(self.src)
-            # the raw expression text rides along: a failing row's
-            # error carries it (op/assert.go: {message, expr, on})
-            return ("assert", e, self.src[start:end].strip())
-        if word == "load":
-            # terminal lake write: load pool[@branch] [author "a"]
-            # [message "m"] (reference load op, docs/language/operators/load.md)
-            self.next()
-            parts = [self.next().text]
-            while (
-                self.peek().text in (".", "/", "-", "@", ":")
-                or self.peek().kind in ("ID", "NUM")
-            ) and self.peek().text not in ("author", "message", "meta"):
-                if self.at_end_of_op():
-                    break
-                parts.append(self.next().text)
-            ref = "".join(parts)
-            author = message = ""
-            while self.peek().text in ("author", "message", "meta"):
-                which = self.next().text
-                tok = self.next()
-                if tok.kind != "STR":
-                    raise SyntaxError(
-                        f"load: {which} requires a quoted string, got {tok.text!r}"
-                    )
-                val = tok.text[1:-1]
-                if which == "author":
-                    author = val
-                elif which == "message":
-                    message = val
-                # `meta "..."` attaches commit metadata (load.md);
-                # the commit journal stores author/message only in
-                # this engine — the clause parses and is accepted
-            return ("load", ref, author, message)
-        if word in ("shape", "cast", "crop", "fit", "order", "fill"):
-            # shaping family with an inline type argument:
-            # `shape {a:int64,b:string}` (docs/language/operators/*).
-            # Guarded so these words still work as field names in
-            # implied puts (`order := 5`) and calls (`cast(v, t)`).
-            nxt = self.peek(1)
-            if nxt.text in ("{", "[") or (
-                nxt.kind == "ID" and self.peek(2).text not in (":=", "(", ".")
-            ):
-                self.next()
-                return ("shapeop", word, self.parse_type_expr())
-            if nxt.text in ("|", ")", "=>", "") or nxt.kind == "EOF":
-                # bare `shape`/`fuse`-style normalization: one
-                # DataFrame already has one shape — identity
-                self.next()
-                return ("pass",)
-        if word == "debug":
-            # debug [expr]: emits the message on the stderr side
-            # channel and passes values through unchanged
-            # (runtime/sam/op/ztests/debug.yaml) — the data path is
-            # identity here; the side channel isn't graded
-            self.next()
-            if not self.at_end_of_op():
-                self.parse_expr()
-            return ("pass",)
-        if word == "explode":
-            # explode <expr-list> by <type> [as <path>]
-            # (runtime/sam/op/explode/explode.go): emit every value
-            # of the target type reachable from each arg — a value of
-            # the type itself, elements of arrays/sets of it, and
-            # record fields recursively
-            self.next()
-            exprs = [self.parse_expr()]
-            while self.accept(","):
-                exprs.append(self.parse_expr())
-            if self.next().text != "by":
-                raise SyntaxError("explode: expected 'by <type>'")
-            ty = self.parse_type_expr()
-            name = "value"
-            if self.peek().text == "as":
-                self.next()
-                name = ".".join(self.parse_path())
-            return ("explode", exprs, ty, name)
-        if word == "cut":
-            self.next()
-            return ("cut", self.parse_assign_list())
-        if word == "put":
-            self.next()
-            return ("put", self.parse_put_list())
-        if word == "drop":
-            self.next()
-            return ("drop", self.parse_path_list())
-        if word == "rename":
-            self.next()
-            out = []
-            while True:
-                def side():
-                    p = self.parse_path()
-                    if self.peek().text == "[":
-                        segs, dyn = self._dyn_segments(p)
-                        if dyn:
-                            return ("dyn", segs)
-                        p = [
-                            n if "." not in n else f"`{n}`"
-                            for _k, n in segs
-                        ] or ["this"]
-                    return ".".join(p)
+            word = self.next().text
+            return {"k": "Shaper", "op": word, "type": self.type_text()}
+        return None
 
-                new = side()
-                self.expect(":=")
-                old = side()
-                out.append((new, old))
-                if not self.accept(","):
-                    break
-            return ("rename", out)
-        if word == "summarize":
-            self.next()
-            return self.parse_summarize()
-        if word == "sort":
-            self.next()
-            desc = False
-            nulls = None
-            while self.peek().text == "-":
-                self.next()
-                flag = self.next()
-                if flag.text == "r":
-                    desc = True
-                elif flag.text == "nulls":
-                    nulls = self.next().text  # first | last
-                    if nulls not in ("first", "last"):
-                        raise SyntaxError(f"sort -nulls: expected first|last, got {nulls!r}")
-                else:
-                    raise SyntaxError(f"unknown sort flag -{flag.text}")
-            keys = []
+    op_cast = op_crop = op_fit = op_order = op_fill = op_shape
 
-            def key():
-                e = self.parse_expr()
-                d = None
-                if self.peek().text in ("asc", "desc"):
-                    d = self.next().text
-                return (e, d)
-
-            if not self.at_end_of_op():
-                keys.append(key())
-                while self.accept(","):
-                    keys.append(key())
-            return ("sort", keys, desc, nulls)
-        if word in ("head", "tail"):
-            # count may be a CONSTANT expression (`head 1+1` —
-            # docs/language/operators/head.md); evaluated at parse
-            # time like the reference's semantic pass
-            self.next()
-            n = 1
-            if not self.at_end_of_op():
-                e = self.parse_expr()
-                n = self._const_int(e)
-            return (word, n)
-        if word == "top":
-            self.next()
-            n = int(self.next().text)
-            keys = [self.parse_expr()]
-            while self.accept(","):
-                keys.append(self.parse_expr())
-            return ("top", n, keys)
-        if word == "uniq":
-            self.next()
-            count = False
-            if self.accept("-"):
-                if self.next().text != "c":
-                    raise SyntaxError("unknown uniq flag")
-                count = True
-            return ("uniq", count)
-        if word == "fuse":
-            if self.peek(1).text == "(":
-                # fuse(e) is the aggregate form (agg/fuse.go)
-                return self.parse_summarize()
-            self.next()
-            return ("fuse",)
-        if word == "yield":
-            self.next()
-            exprs = [self.parse_expr()]
-            while self.accept(","):
-                exprs.append(self.parse_expr())
-            return ("yield", exprs)
-        if word == "over":
-            self.next()
-            e = self.parse_expr()
-            if self.peek().text == ",":
-                # over e1, e2, ... — each expr traverses in turn
-                # (over.md: the over clause takes an expr list)
-                exprs = [e]
-                while self.accept(","):
-                    exprs.append(self.parse_expr())
-                e = ("overlist", exprs)
-            with_vars = []
-            if self.peek().text == "with":
-                self.next()
-                while True:
-                    vname = self.next().text
-                    if self.peek().text == "=" and self.peek(1).text != ">":
-                        self.next()
-                        with_vars.append((vname, self.parse_expr()))
-                    else:
-                        # bare `with b`: shorthand for b=b
-                        # (docs/language/operators/over.md)
-                        with_vars.append((vname, ("field", [vname])))
-                    if not self.accept(","):
-                        break
-            scoped = None
-            if self.accept("=>"):
-                # scoped lateral body: over x => ( ops... )
-                self.expect("(")
-                scoped = self.parse_pipeline()
-                self.expect(")")
-            return ("over", e, with_vars, scoped)
-        if word == "join":
-            # `join (subquery) on k=k` is the operator; `join(arr,
-            # sep)` is the function call (string.go Join) — the
-            # operator form has `on` after its matching close-paren
-            if self.peek(1).text == "(" and not self._paren_then_on(1):
-                pass  # expression form — fall through to exprop
-            else:
-                self.next()
-                return self.parse_join()
-        if word in ("left", "right", "inner", "anti") and self.peek(1).text == "join":
-            # reference prefix-kind form: `anti join ( ... ) on a=b`
-            self.next()
-            self.next()
-            return self.parse_join(kind=word)
-        if word == "merge":
-            # re-establish order by key after fork/combine legs
-            self.next()
-            keys = [self.parse_expr()]
-            while self.accept(","):
-                keys.append(self.parse_expr())
-            return ("merge", keys)
-        if word == "switch":
-            self.next()
-            return self.parse_switch()
-        if word == "fork":
-            self.next()
-            self.expect("(")
-            legs = []
-            while self.accept("=>"):
-                legs.append(self.parse_pipeline())
-            self.expect(")")
-            if not legs:
-                raise SyntaxError("fork needs at least one '=> ...' leg")
-            return ("fork", legs)
-        if word == "count" and self.peek(1).text == "(":
-            return self.parse_summarize()
-        if (
-            t.kind == "ID"
-            and t.text in getattr(self, "user_op_names", ())
-            and self.peek(1).text == "("
-        ):
-            self.next()
-            self.expect("(")
-            args = []
-            if self.peek().text != ")":
-                args.append(self.parse_expr())
-                while self.accept(","):
-                    args.append(self.parse_expr())
-            self.expect(")")
-            return ("opcall", t.text, args)
-        # disambiguate: assignment op (put sugar), agg-call op
-        # (summarize sugar), search term, or implied where
+    def op_expr(self) -> dict:
+        """Ambiguous op-position expression: an assignment list (put or
+        summarize), an aggregate list, or a search/expression."""
         save = self.i
         try:
-            return self.parse_summarize_if_aggs()
-        except _NotAggs:
-            self.i = save
-        if self.peek().kind == "ID" and (
-            self.peek(1).text == ":=" or self._looks_assignment()
-        ):
-            return ("put", self.parse_put_list())
-        if word == "search":
-            # explicit search keyword (the long form of the implied
-            # search operator)
-            self.next()
-            node, _t, _n = self._search_or()
-            return ("where", node)
-        # search EXPRESSION at op position (search.go / docs
-        # search-expressions.md): adjacent factors imply AND; factors
-        # are bare terms / globs / regexps / net literals or ordinary
-        # comparison expressions; `*` alone matches everything
-        if t.text == "*" and self.peek(1).text in ("|", ")", "") or (
-            t.text == "*" and self.peek(1).kind == "EOF"
-        ):
-            self.next()
-            return ("pass",)
-        save_all = self.i
-        node, has_term, nfac = self._search_or()
-        if has_term:
-            # single-term searches keep the specialized op forms
-            if nfac == 1 and node[0] == "sterm":
-                return ("search", node[1])
-            if nfac == 1 and node[0] == "sglob":
-                return ("searchglob", node[1])
-            if nfac == 1 and node[0] == "sre":
-                return ("searchre", node[1])
-            if nfac == 1 and node[0] == "snet":
-                return ("search", node[1])
-            return ("where", node)
-        if nfac > 1:
-            return ("where", node)
-        # single non-term factor: re-parse with the FULL expression
-        # grammar (conditionals etc.) and defer where-vs-yield
-        self.i = save_all
-        e = self.parse_expr()
-        # implied operators (pipeline-model.md:203): search/where has
-        # precedence, but a non-boolean expression is an implied
-        # `yield` — the compiler decides by static type ("exprop")
-        if isinstance(e, tuple) and e[0] in (
-            "record", "array", "set", "map", "fstring"
-        ):
-            return ("yield", [e])
-        return ("exprop", e)
-
-    # --- search-expression grammar --------------------------------
-    _EXPR_FOLLOW = {
-        "==", "!=", "<", "<=", ">", ">=", "in", "+", "-", "/", "%",
-        "*", "?", ":=", "=",
-    }
-
-    def _search_or(self):
-        # connectives are case-insensitive in search expressions
-        # (search-expressions.md: `a AND b`, `a OR b`)
-        l, lt, n = self._search_and()
-        while self.peek().text.lower() == "or":
-            self.next()
-            r, rt, n2 = self._search_and()
-            l, lt, n = ("bin", "or", l, r), lt or rt, n + n2
-        return l, lt, n
-
-    def _search_and(self):
-        l, lt, n = self._search_not()
-        while True:
-            nxt = self.peek()
-            if nxt.text in getattr(self, "stop_words", ()):
-                break
-            if nxt.text.lower() == "and":
-                self.next()
-            elif self.at_end_of_op() or nxt.text.lower() == "or":
-                break
-            elif nxt.text not in ("(", "!", "not", "*") and nxt.kind not in (
-                "ID", "NUM", "STR", "BSTR", "REGEX"
+            assigns = self.assignments(first_assign=True)
+            if self._at_op_end():
+                return {"k": "OpAssignment", "assigns": assigns}
+            if (self.at("by") or self.at("with")) and all(
+                _is_agg_call(a["rhs"]) for a in assigns
             ):
-                # can't start a search factor (e.g. `?` of a
-                # conditional) — let the caller re-parse as a full
-                # expression
-                break
-            r, rt, n2 = self._search_not()
-            l, lt, n = ("bin", "and", l, r), lt or rt, n + n2
-        return l, lt, n
+                return self._summarize(assigns)
+        except SyntaxError:
+            pass
+        self.i = save
+        e = self.search()
+        if _is_agg_call(e) and (self.at(",") or self.at("with")):
+            # `sum(x), max(x) [by k]` (implied summarize)
+            aggs = [_assign(None, e)]
+            while self.eat(","):
+                aggs.append(self.assignment())
+            return self._summarize(aggs)
+        if _is_agg_call(e) and self.eat("by"):
+            # `count() by k` shorthand (implied summarize)
+            keys = self.assignments()
+            return self._limit({"k": "Summarize", "keys": keys, "limit": 0,
+                                "aggs": [_assign(None, e)]})
+        return {"k": "OpExpr", "expr": e}
 
-    def _search_not(self):
-        if self.peek().text.lower() in ("not", "!"):
+    def assignments(self, first_assign: bool = False) -> list:
+        """A comma list of `lhs:=rhs` or bare expressions."""
+        out = [self.assignment(first_assign)]
+        while self.eat(","):
+            out.append(self.assignment())
+        return out
+
+    def assignment(self, required: bool = False) -> dict:
+        lhs = self.expr()
+        if self.eat(":="):
+            return _assign(lhs, self.expr())
+        if required:
+            t = self.peek()
+            raise SyntaxError(f"expected ':=', got {t.text!r} at {t.pos}")
+        return _assign(None, lhs)
+
+    # --- search expressions (op position)
+    def search(self) -> dict:
+        """Search expression: adjacent factors imply AND; factors are
+        bare terms, globs, regexps, quoted strings or comparisons."""
+        start, self.terms = self.i, 0
+        e = self._search_or()
+        if not self.terms and _count_factors(e) == 1:
+            # a lone non-term factor is a plain expression: re-parse
+            # with the full grammar (conditionals etc.)
+            self.i = start
+            return _to_search(self.expr())
+        return e
+
+    def _search_or(self) -> dict:
+        e = self._search_and()
+        while self.peek().kind == "ID" and self.peek().text.lower() == "or":
             self.next()
-            e, t, n = self._search_not()
-            return ("un", "not", e), t, n
+            e = _bin("or", e, self._search_and())
+        return e
+
+    def _search_and(self) -> dict:
+        e = self._search_not()
+        while True:
+            t = self.peek()
+            low = t.text.lower() if t.kind == "ID" else ""
+            if low == "and":
+                self.next()
+                e = _bin("and", e, self._search_not())
+            elif self._at_op_end() or low in ("or", "by", "with") or (
+                t.text not in ("(", "!", "not", "*")
+                and t.kind not in ("ID", "NUM", "STR", "BSTR", "REGEX")
+            ):
+                return e  # can't start a factor (e.g. `?`, `,`)
+            else:
+                rhs = _to_search_atom(self._search_not())
+                e = _bin("and", _to_search_atom(e), rhs)
+
+    def _search_not(self) -> dict:
+        t = self.peek()
+        if t.text == "!" or (t.kind == "ID" and t.text.lower() == "not"):
+            self.next()
+            return {"k": "Unary", "op": "!", "operand": self._search_not()}
         return self._search_primary()
 
-    def _search_primary(self):
-        import re as _re4
-
+    def _search_primary(self) -> dict:
         t = self.peek()
-        if t.text == "(":
+        if t.text == "(" and t.kind == "OP":
             self.next()
-            e, tt, n = self._search_or()
+            e = self._search_or()
             self.expect(")")
-            return e, tt, n
-        if t.kind == "REGEX":
-            self.next()
-            return ("sre", t.text[1:-1]), True, 1
-        if t.kind == "STR" and self.peek(1).text not in self._EXPR_FOLLOW:
-            self.next()
-            return ("sterm", t.text[1:-1]), True, 1
+            return {"k": "Paren", "expr": e}
+        if t.kind == "REGEX" or (
+            t.kind == "STR" and self.peek(1).text not in _EXPR_FOLLOW
+        ):
+            self.terms += 1
+            return self.primary()
         if (
             t.kind in ("ID", "NUM", "BSTR") or t.text == "*"
         ) and t.text not in ("true", "false", "null", "this"):
             save = self.i
-            term = self.next().text
-            end = t.pos + len(term)
+            toks = [self.next()]
+            end = t.pos + len(t.text)
             while (
                 self.peek().kind in ("ID", "NUM", "BSTR")
                 or self.peek().text in ("*", ".", "/", ":", "-")
             ) and self.peek().pos == end:
-                nxt = self.next()
-                term += nxt.text
-                end = nxt.pos + len(nxt.text)
+                toks.append(self.next())
+                end = toks[-1].pos + len(toks[-1].text)
+            term = "".join(x.text for x in toks)
             nxt = self.peek()
-            is_expr = nxt.text in self._EXPR_FOLLOW or (
+            is_expr = nxt.text in _EXPR_FOLLOW or (
                 nxt.text in ("(", "[", ".") and nxt.pos == end
             )
-            if not is_expr:
-                if _re4.fullmatch(
-                    r"[\d.]+/\d+|[0-9a-fA-F:]*:[0-9a-fA-F:]*/\d+", term
-                ):
-                    return ("snet", term), True, 1
-                if _re4.fullmatch(r"\w+(?:[*/]\w+)+", term) and not _re4.fullmatch(
-                    r"[\d.:]+(?:[*/][\d.:]+)+", term
-                ):
-                    # every star/slash is INFIX between word operands
-                    # and at least one operand is an identifier
-                    # (`2*PI*r`, `1/this`): the reference's grammar
-                    # prefers the valid arithmetic parse over a
-                    # glob/term (statements.md, data-types.md); pure
-                    # numeric forms stay search terms (net literals,
-                    # date-ish tokens)
-                    self.i = save
-                    return self.parse_cmp(), False, 1
-                if _re4.search(r"(?<!\\)\*", term):
-                    return ("sglob", term), True, 1
-                return (
-                    ("sterm", _re4.sub(r"\\(.)", r"\1", term)),
-                    True,
-                    1,
-                )
+            # every star/slash INFIX between word operands with an
+            # identifier among them (`2*PI*r`) is arithmetic; other
+            # runs are terms, globs or nets
+            arith = (
+                re.fullmatch(r"\w+(?:[*/]\w+)+", term)
+                and not re.fullmatch(r"[\d.:]+(?:[*/][\d.:]+)+", term)
+                and not _NET_RE.fullmatch(term)
+            )
+            if not is_expr and not arith:
+                self.terms += 1
+                if len(toks) == 1 and t.kind == "ID":
+                    return {"k": "Term", "text": t.text}
+                if len(toks) == 1 and t.kind == "NUM":
+                    return _prim("float64" if "." in term else "int64", term)
+                if re.search(r"(?<!\\)\*", term) and not _NET_RE.fullmatch(term):
+                    return {"k": "Glob", "text": term}
+                if all(x.kind == "ID" or x.text == "." for x in toks):
+                    # a dotted path stays a path; lowering reads it as a term
+                    e = {"k": "ID", "name": toks[0].text}
+                    for x in toks[2::2]:
+                        e = _bin(".", e, {"k": "ID", "name": x.text})
+                    return e
+                return {"k": "Term", "text": term}
             self.i = save
-        return self.parse_cmp(), False, 1
+        return self.cmp_expr()
 
-    def parse_source_name(self) -> str:
-        tok = self.next()
-        parts = [tok.text]
-        end = tok.pos + len(tok.text)
-        # allow dotted / path-ish names (events.parquet, sf0.01/events)
-        # and lake refs (pool@branch, pool:log, :pools — the
-        # reference's commitish/meta syntax, lake/parse.go). Only
-        # punctuation continues a name: a bare ID after whitespace is
-        # the next token stream element (e.g. the `file` keyword of a
-        # second source in `from ( file a file b )`).
-        # `*` supports pool patterns (`from *`, `from match*`) and
-        # regex refs (`from /.*/`) — lake/parse.go from-patterns
-        seps = (".", "/", "-", "@", ":", "*")
-        while True:
-            nxt = self.peek()
-            if nxt.text in seps and not self.at_end_of_op():
-                tok = self.next()
-            elif parts[-1] in seps and nxt.kind in ("ID", "NUM"):
-                # an ID/NUM continues the name only right after a
-                # separator — a space-separated bare ID is the next
-                # element (`from ( file a file b )`)
-                tok = self.next()
-            elif (
-                nxt.kind in ("ID", "NUM")
-                and nxt.pos == end
-                and not self.at_end_of_op()
-            ):
-                # adjacency glue: ksuid commit refs lex as NUM+ID
-                # runs (`from pool@3HvFz...` time travel) — no
-                # whitespace means the run is one name
-                tok = self.next()
-            else:
-                break
-            parts.append(tok.text)
-            end = tok.pos + len(tok.text)
-        return "".join(parts)
+    # --- expressions (precedence climbing)
+    def expr(self) -> dict:
+        e = self.or_expr()
+        if not self.eat("?"):
+            return e
+        then = self.expr()
+        self.expect(":")
+        return {"k": "Cond", "cond": e, "then": then, "else": self.expr()}
 
-    def _fstring(self, raw: str) -> tuple:
-        """f"... {expr} ..." → ('fstr', [('str', lit) | expr, ...])
-        (docs/language/expressions.md formatted string literals;
-        nested f-strings inside replacements are not in the subset)."""
-        import json as _json
+    def or_expr(self) -> dict:
+        e = self.and_expr()
+        while self.peek().kind == "ID" and self.peek().text in ("or", "OR"):
+            self.next()
+            e = _bin("or", e, self.and_expr())
+        return e
 
-        body = raw[2:-1]
-        parts: list[tuple] = []
-        lit: list[str] = []
+    def and_expr(self) -> dict:
+        e = self.not_expr()
+        while self.peek().kind == "ID" and self.peek().text in ("and", "AND"):
+            self.next()
+            e = _bin("and", e, self.not_expr())
+        return e
 
-        def flush():
-            if lit:
-                parts.append(("str", _json.loads('"' + "".join(lit) + '"')))
-                lit.clear()
-
-        i = 0
-        while i < len(body):
-            c = body[i]
-            if c == "\\" and i + 1 < len(body):
-                if body[i + 1] in "{}":
-                    # \{ / \} — literal brace, not a replacement
-                    # (expressions.md f-string escapes)
-                    lit.append(body[i + 1])
-                else:
-                    lit.append(body[i : i + 2])
-                i += 2
-                continue
-            if c == "{":
-                depth, j = 1, i + 1
-                while j < len(body) and depth:
-                    depth += {"{": 1, "}": -1}.get(body[j], 0)
-                    j += 1
-                if depth:
-                    raise SyntaxError("unterminated '{' in f-string")
-                sub = Parser(body[i + 1 : j - 1])
-                e = sub.parse_expr()
-                if sub.peek().kind != "EOF":
-                    raise SyntaxError("trailing input in f-string expression")
-                flush()
-                parts.append(e)
-                i = j
-                continue
-            lit.append(c)
-            i += 1
-        flush()
-        return ("fstr", parts)
-
-    def parse_type_expr(self) -> tuple:
-        """Type syntax for named-type decls: primitive name, named
-        ref, [elem] array, {field:type,...} record."""
+    def not_expr(self) -> dict:
         t = self.peek()
-        if t.text == "[":
+        if (t.kind == "OP" and t.text == "!") or (
+            t.kind == "ID" and t.text in ("not", "NOT")
+        ):
             self.next()
-            inner = self.parse_type_expr()
-            self.expect("]")
-            return ("array", inner)
-        if t.text == "|":
-            # |[elem]| set / |{key:val}| map (sets ride as arrays)
+            return {"k": "Unary", "op": "!", "operand": self.not_expr()}
+        return self.cmp_expr()
+
+    def cmp_expr(self) -> dict:
+        e = self.add_expr()
+        t = self.peek()
+        if t.kind == "OP" and t.text in ("==", "!=", "<", "<=", ">", ">=") or (
+            t.kind == "ID" and t.text == "in"
+        ):
             self.next()
-            if self.accept("["):
-                inner = self.parse_type_expr()
+            return _bin(t.text, e, self.add_expr())
+        if t.kind == "OP" and t.text in ("~", "!~"):
+            # regexp match: e ~ /re/ (docs/language/expressions.md)
+            self.next()
+            if self.peek().kind not in ("REGEX", "STR"):
+                r = self.peek()
+                raise SyntaxError(f"expected /regexp/ after {t.text!r} at {r.pos}")
+            return _bin(t.text, e, self.primary())
+        return e
+
+    def add_expr(self) -> dict:
+        e = self.mul_expr()
+        while self.peek().kind == "OP" and self.peek().text in ("+", "-"):
+            e = _bin(self.next().text, e, self.mul_expr())
+        return e
+
+    def mul_expr(self) -> dict:
+        e = self.unary_expr()
+        while self.peek().kind == "OP" and self.peek().text in ("*", "/", "%"):
+            e = _bin(self.next().text, e, self.unary_expr())
+        return e
+
+    def unary_expr(self) -> dict:
+        if self.eat("-"):
+            return {"k": "Unary", "op": "-", "operand": self.unary_expr()}
+        return self.postfix_expr()
+
+    def postfix_expr(self, calls: bool = True) -> dict:
+        e = self.primary(calls)
+        while True:
+            if self.at(".") and self.peek(1).kind == "ID":
+                self.next()
+                e = _bin(".", e, {"k": "ID", "name": self.next().text})
+            elif self.eat("["):
+                lo = None if self.at(":") else self.expr()
+                if self.eat(":"):
+                    hi = None if self.at("]") else self.expr()
+                    e = {"k": "Slice", "expr": e, "from": lo, "to": hi}
+                else:
+                    e = {"k": "Index", "expr": e, "index": lo}
                 self.expect("]")
+            else:
+                return e
+
+    def primary(self, calls: bool = True) -> dict:
+        t = self.next()
+        k, text = t.kind, t.text
+        if k == "NUM":
+            return _prim("float64" if "." in text else "int64", text)
+        if k == "STR":
+            return _prim("string", text[1:-1])
+        if k in ("TIME", "DUR"):
+            return _prim("time" if k == "TIME" else "duration", text)
+        if k == "IP":
+            return _prim("net" if "/" in text else "ip", text)
+        if k == "FSTR":
+            return _parse_fstring(text)
+        if k == "REGEX":
+            return {"k": "Regexp", "pattern": text[1:-1]}
+        if k == "BSTR":
+            return {"k": "Glob" if "*" in text else "Term", "text": text}
+        if k == "OP" and text == "(":
+            if self.at("over"):
+                # lateral subquery as an expression (OverExpr)
+                ov = self.op_over()
+                body = self._piped([])
+                self.expect(")")
+                return {"k": "OverExpr", "exprs": ov["exprs"],
+                        "locals": ov["locals"], "body": body}
+            e = self.expr()
+            self.expect(")")
+            return {"k": "Paren", "expr": e}
+        if k == "OP" and text == "{":
+            return {"k": "Record", "elems": self.listed(self.record_elem, "}")}
+        if k == "OP" and text == "[":
+            return {"k": "Array", "elems": self.listed(self.vector_elem, "]")}
+        if k == "OP" and text == "|":
+            # |[ ... ]| set or |{ ... }| map
+            if self.eat("["):
+                elems = self.listed(self.vector_elem, "]")
                 self.expect("|")
-                return ("settype", inner)
+                return {"k": "Set", "elems": elems}
             self.expect("{")
-            kt = self.parse_type_expr()
-            self.expect(":")
-            vt = self.parse_type_expr()
-            self.expect("}")
+            entries = self.listed(self.map_entry, "}")
             self.expect("|")
-            return ("maptype", kt, vt)
-        if t.text == "(":
-            self.next()
-            members = [self.parse_type_expr()]
-            while self.accept(","):
-                members.append(self.parse_type_expr())
-            self.expect(")")
-            return ("uniontype", members)
-        if t.text == "{":
-            self.next()
-            fields = []
-            if self.peek().text != "}":
-                while True:
-                    name = self.next().text
-                    self.expect(":")
-                    fields.append((name, self.parse_type_expr()))
-                    if not self.accept(","):
-                        break
-            self.expect("}")
-            return ("recordtype", fields)
-        name = self.next().text
-        if self.peek().text == "=" and self.peek(1).text != "=":
-            # inline named-type definition `port=uint16` inside a type
-            # expression (zson.md named types) — names widen to the
-            # underlying type in this model (SURVEY §1.2)
-            self.next()
-            return self.parse_type_expr()
-        return ("prim", name)
+            return {"k": "Map", "entries": entries}
+        if k == "OP" and text == "<":
+            # type value <...>; possibly a cast <type>(expr)
+            tv = {"k": "TypeValue", "text": self._angle_type_text(t.pos)}
+            if self.eat("("):
+                inner = self.expr()
+                self.expect(")")
+                return {"k": "Cast", "type": tv, "expr": inner}
+            return tv
+        if k != "ID":
+            raise SyntaxError(f"unexpected token {text!r} at {t.pos}")
+        if text in ("true", "false"):
+            return _prim("bool", text)
+        if text == "null":
+            return _prim("null", "null")
+        if not calls or text == "this" or not self.eat("("):
+            return {"k": "ID", "name": text}
+        if text == "grep":
+            return self.grep_args()
+        call = {"k": "Call", "name": text, "args": self.listed(self.expr, ")")}
+        if self.eat("where"):
+            return {"k": "Agg", "name": text,
+                    "expr": call["args"][0] if call["args"] else None,
+                    "where": _to_search(self.expr()), "call": call}
+        return call
 
-    # --- summarize ---------------------------------------------------
-    def parse_summarize(self) -> tuple:
-        aggs = [self.parse_agg()]
-        while self.accept(","):
-            aggs.append(self.parse_agg())
-        keys, every = [], None
-        if self.accept("by"):
-            while True:
-                k = self.parse_key()
-                if k[0] == "every":
-                    every = k[1]
-                else:
-                    keys.append(k)
-                if not self.accept(","):
-                    break
-        if self.peek().text == "with" and self.peek(1).text == "-":
-            # trailing `with -limit N` (spill-threshold tuning knob —
-            # Spark's HashAggregate owns partials; parse and ignore)
-            self.next()
-            self.next()
-            self.next()
-            self.next()
-        return ("summarize", aggs, keys, every)
-
-    def parse_summarize_if_aggs(self) -> tuple:
-        """Try to parse the op as implied-summarize (agg calls)."""
-        save = self.i
-        # optional name:= — the name may be a dotted path
-        # (result.count:=count())
-        k = 0
-        if self.peek().kind == "ID" and self.peek(1).text in (":=", "."):
-            k = 1
-            while self.peek(k).text == "." and self.peek(k + 1).kind == "ID":
-                k += 2
-            if self.peek(k).text == ":=":
-                k += 1
-            else:
-                k = 0
-        fn_tok = self.peek(k)
-        if not (fn_tok.kind == "ID" and fn_tok.text in AGG_FNS):
-            raise _NotAggs()
-        # must be a call
-        if self.peek(k + 1).text != "(":
-            raise _NotAggs()
-        self.i = save
-        return self.parse_summarize()
-
-    def parse_agg(self) -> tuple:
-        name = None
-        if self.peek().kind == "ID" and self.peek(1).text in (":=", "."):
-            # assignment target may be a dotted path
-            # (groupby/ztests/nested-agg-name: result.count:=count())
-            save = self.i
-            parts = self.parse_path()
-            if self.peek().text == ":=":
-                self.next()
-                name = ".".join(parts)
-            else:
-                self.i = save
-        fn = self.next().text
-        if fn not in AGG_FNS:
-            raise SyntaxError(f"unknown aggregate {fn!r}")
-        self.expect("(")
-        arg = None if self.peek().text == ")" else self.parse_expr()
+    def grep_args(self) -> dict:
+        """grep(pattern[, e]); the pattern may be a bare glob
+        (`grep(*foo*)` — search-expr.md grep)."""
+        if self.at("*") or (
+            self.peek().kind in ("ID", "NUM")
+            and self.peek(1).text in ("*", "?")
+        ):
+            parts = []
+            while self.peek().text not in (",", ")") and not self.done():
+                parts.append(self.next().text)
+            pat = {"k": "Glob", "text": "".join(parts)}
+        else:
+            pat = self.expr()
+        e = self.expr() if self.eat(",") else None
         self.expect(")")
-        where = None
-        if self.peek().text == "where":
-            self.next()
-            where = self.parse_expr()
-        if self.peek().text == "with" and self.peek(1).text == "-":
-            # `with -limit N` tunes the reference's partials spill
-            # threshold (groupby.go) — a no-op here: Spark's
-            # HashAggregate owns partial/final decomposition
-            self.next()
-            self.next()
-            self.next()
-            self.next()
-        # name None = UNASSIGNED: a single unassigned agg with no
-        # keys yields its value bare (summarize.md: `summarize
-        # avg(this)` → 2.5, not {avg:2.5}); consumers default to fn
-        return (name, fn, arg, where)
+        return {"k": "Grep", "pattern": pat, "expr": e}
 
-    def parse_key(self) -> tuple:
-        # every(dur) | name:=expr | path
-        if self.peek().text == "every" and self.peek(1).text == "(":
-            self.next()
-            self.expect("(")
-            d = self.next()
-            self.expect(")")
-            return ("every", d.text)
-        if self.peek().kind == "ID" and self.peek(1).text in (":=", "."):
-            # named key; the target may be a dotted path
-            # (groupby/ztests/key-in-record, nested-agg-name)
-            save = self.i
-            parts = self.parse_path()
-            if self.peek().text == ":=":
-                self.next()
-                return (".".join(parts), self.parse_expr())
-            self.i = save
-        e = self.parse_expr()
-        if e[0] == "field":
-            # a dotted path key keeps its nesting in the output
-            # record: `by rec.i` emits {rec:{i:...}} (key-in-record)
-            return (".".join(e[1]), e)
-        if e[0] == "call":
-            # derived key name = the function's name (semantic
-            # deriveAs: `by nameof(this)` groups under "nameof")
-            return (e[1], e)
-        raise SyntaxError("group-by key expressions need a name (k:=expr)")
+    def record_elem(self) -> tuple:
+        if self.eat("..."):
+            return ("spread", self.expr())
+        t = self.next()
+        name = t.text[1:-1] if t.kind == "STR" else t.text
+        return ("field", name, self.expr()) if self.eat(":") else ("id", name)
 
-    def parse_switch(self) -> tuple:
-        """switch [expr] ( case <expr> => seq ... [default => seq] )
-        (reference: switcher/switch.go value-routing and
-        exprswitch.go boolean-case routing)."""
-        selector = None
-        if self.peek().text != "(":
-            # a bare field path directly followed by '(' is the
-            # selector (not a call): `switch event_type ( case ... )`
-            # — UNLESS the paren opens a call (`switch len(a) (`),
-            # told apart by whether 'case'/'default' follows the '('
-            if self.peek().kind == "ID" and not (
-                self.peek(1).text == "(" and self.peek(2).text not in ("case", "default")
-            ):
-                selector = ("field", self.parse_path())
+    def vector_elem(self) -> tuple:
+        return ("spread", self.expr()) if self.eat("...") else ("v", self.expr())
+
+    def map_entry(self) -> tuple:
+        k = self.expr()
+        self.expect(":")
+        return (k, self.expr())
+
+    def _angle_type_text(self, start: int) -> str:
+        """Raw text of a <...> type value (balanced angle brackets)."""
+        depth, end = 1, start
+        while depth and not self.done():
+            t = self.next()
+            depth += {"<": 1, ">": -1}.get(t.text, 0)
+            end = t.pos + len(t.text)
+        return self.src[start + 1 : end - 1]
+
+
+def _bin(op: str, lhs: dict, rhs: dict) -> dict:
+    return {"k": "Bin", "op": op, "lhs": lhs, "rhs": rhs}
+
+
+def _prim(typ: str, text: str) -> dict:
+    return {"k": "Prim", "type": typ, "text": text}
+
+
+def _parse_fstring(text: str) -> dict:
+    """f"..." literal → FString node with text/expr parts."""
+    inner = text[2:-1]
+    parts: list = []
+    buf = ""
+    i = 0
+    while i < len(inner):
+        ch = inner[i]
+        if ch == "\\":
+            buf += inner[i : i + 2]
+            i += 2
+            continue
+        if ch != "{":
+            buf += ch
+            i += 1
+            continue
+        depth, j = 1, i + 1
+        while j < len(inner) and depth:
+            if inner[j] in "{}":
+                depth += 1 if inner[j] == "{" else -1
+            elif inner[j] in "\"'":
+                q = inner[j]
+                j += 1
+                while j < len(inner) and inner[j] != q:
+                    j += 2 if inner[j] == "\\" else 1
+            j += 1
+        if depth:
+            raise SyntaxError("unterminated '{' in f-string")
+        if buf:
+            parts.append(("text", buf))
+            buf = ""
+        sub = _Parser(inner[i + 1 : j - 1])
+        parts.append(("expr", sub.expr()))
+        if not sub.done():
+            raise SyntaxError("trailing input in f-string expression")
+        i = j
+    if buf:
+        parts.append(("text", buf))
+    return {"k": "FString", "parts": parts}
+
+
+def _to_search_atom(e: dict) -> dict:
+    """A juxtaposed search atom: bare numbers become Terms with their
+    raw source text (the PEG's search-term rule)."""
+    if e["k"] == "Prim" and e["type"] in ("int64", "float64"):
+        return {"k": "Term", "text": e["text"]}
+    return e
+
+
+def _to_search(e: dict) -> dict:
+    """Convert bare identifiers in a pure and/or/! tree to search
+    Terms (the PEG parses these as search atoms; IsSearch in
+    zfmt/ast.go:793 then classifies the op as a search)."""
+    if e["k"] == "Bin" and e["op"] in ("and", "or"):
+        return _bin(e["op"], _to_search(e["lhs"]), _to_search(e["rhs"]))
+    if e["k"] == "Unary" and e["op"] == "!":
+        return {"k": "Unary", "op": "!", "operand": _to_search(e["operand"])}
+    if e["k"] == "ID" and e["name"] != "this":
+        return {"k": "Term", "text": e["name"]}
+    return e
+
+
+def _is_agg_call(e) -> bool:
+    return e["k"] in ("Call", "Agg") and e["name"] in _AGG_NAMES
+
+
+def _search_leaves(e: dict):
+    """The factors of a search expression's and/or/!/paren skeleton."""
+    k = e["k"]
+    if k == "Bin" and e["op"] in ("and", "or"):
+        yield from _search_leaves(e["lhs"])
+        yield from _search_leaves(e["rhs"])
+    elif k == "Unary" and e["op"] == "!":
+        yield from _search_leaves(e["operand"])
+    elif k == "Paren":
+        yield from _search_leaves(e["expr"])
+    else:
+        yield e
+
+
+def _count_factors(e: dict) -> int:
+    return sum(1 for _ in _search_leaves(e))
+
+
+def _is_term(e: dict) -> bool:
+    if e["k"] == "Prim":
+        return e["type"] in ("string", "int64", "float64")
+    return e["k"] in ("Term", "Glob", "Regexp") or _dotted(e) is not None
+
+
+def _is_path(e: dict) -> bool:
+    while e["k"] == "Index" or (e["k"] == "Bin" and e["op"] == "."):
+        e = e.get("expr") or e["lhs"]
+    return e["k"] == "ID"
+
+
+def _dotted(e: dict):
+    """`a.b.c` as a list of names, or None if e is not a bare path."""
+    if e["k"] == "ID":
+        return None if e["name"] == "this" else [e["name"]]
+    if e["k"] == "Bin" and e["op"] == ".":
+        head = _dotted(e["lhs"])
+        if head is not None:
+            return head + [e["rhs"]["name"]]
+    return None
+
+
+def parse_ast(src: str) -> list:
+    """Parse query text into the reference-shaped dict AST."""
+    return _Parser(src).parse()
+
+
+# ---------------------------------------------------------------------------
+# lowering: dict AST → the compiler's tuple AST
+
+_SENTINEL = object()
+
+_FOLD = {
+    "+": operator.add, "-": operator.sub, "*": operator.mul,
+    "%": operator.mod, "/": operator.floordiv,
+}
+
+
+def _const_dep_check(e, consts: dict, name: str, types: dict) -> None:
+    """const bodies must be data-independent (semantic/op.go: 'const
+    ... cannot have variable dependency'): field/this references are
+    rejected unless the name is a previously declared const — or a
+    declared named TYPE, which reads as a type value (expr/ztests/
+    type-map: const schemas = |{"conn": conn, ...}|)."""
+    if e[0] == "this" or (
+        e[0] == "field" and e[1] and ".".join(e[1]) not in consts
+        and e[1][0] not in consts and e[1][0] not in types
+    ):
+        raise ValueError(f'const "{name}" cannot have variable dependency')
+    for sub in e[1:]:
+        for x in sub if isinstance(sub, list) else [sub]:
+            if isinstance(x, tuple):
+                _const_dep_check(x, consts, name, types)
+
+
+def _const_int(e: tuple) -> int:
+    """Fold a constant integer expression (head/tail counts)."""
+    if e[0] == "num":
+        return int(e[1])
+    if e[0] == "bin" and e[1] in _FOLD:
+        return int(_FOLD[e[1]](_const_int(e[2]), _const_int(e[3])))
+    if e[0] == "un" and e[1] == "-":
+        return -_const_int(e[2])
+    raise SyntaxError(f"expected a constant count, got {e!r}")
+
+
+def _type_tuple(text: str) -> tuple:
+    p = _Parser(text)
+    ty = p.type_expr()
+    if not p.done():
+        t = p.peek()
+        raise SyntaxError(f"trailing input at {t.pos}: {t.text!r}")
+    return ty
+
+
+def _fstring_text(raw: str) -> tuple:
+    """An f-string's literal run: `\\{`/`\\}` are literal braces, other
+    escapes decode as JSON string escapes."""
+    text = re.sub(r"\\([{}])|(\\.)", lambda m: m[1] or m[2], raw)
+    return ("str", json.loads('"' + text + '"'))
+
+
+def _backtick(name: str) -> str:
+    return f"`{name}`" if "." in name else name
+
+
+class _Lower:
+    """One pass over the dict AST. Declarations accumulate at query
+    level (a parenthesized scope keeps its own consts and funcs);
+    every lexical scope rejects a second declaration of one name."""
+
+    def __init__(self):
+        self.funcs: dict[str, tuple[list[str], tuple]] = {}
+        self.consts: dict[str, tuple] = {}
+        self.user_ops: dict[str, tuple[list[str], list[tuple]]] = {}
+        self.types: dict[str, tuple] = {}
+        self.op_names: set[str] = set()
+        self.scopes: list[set[str]] = [set()]
+
+    def run(self, seq: list) -> list[tuple]:
+        ops = self.seq(seq)
+        if self.funcs or self.consts or self.user_ops or self.types:
+            decls = ("decls", self.funcs, self.consts, self.user_ops, self.types)
+            return [decls] + ops
+        return ops
+
+    # --- declarations
+    def seq(self, seq: list) -> list[tuple]:
+        out = []
+        for node in seq:
+            if node["k"] == "Scope" and node["decls"]:
+                self.decls(node["decls"])
+                out.extend(self.seq(node["body"]))
             else:
-                selector = self.parse_expr()
-        self.expect("(")
-        cases: list[tuple] = []
-        # inside the switch body, `case`/`default` are keywords: a
-        # case pipeline must stop before them (an implicit-AND search
-        # would otherwise swallow `case <expr>` as bare search terms —
-        # docs/language/operators/switch.md record-literal bodies)
-        saved_stop = getattr(self, "stop_words", set())
-        self.stop_words = saved_stop | {"case", "default"}
-        try:
-            while not self.accept(")"):
-                t = self.next()
-                if t.text == "case":
-                    cond = self.parse_expr()
-                    self.expect("=>")
-                    cases.append((cond, self.parse_pipeline()))
-                elif t.text == "default":
-                    self.expect("=>")
-                    cases.append((None, self.parse_pipeline()))
-                else:
-                    raise SyntaxError(f"expected 'case' or 'default', got {t.text!r} at {t.pos}")
-        finally:
-            self.stop_words = saved_stop
+                out.append(self.op(node))
+        return out
+
+    def declare(self, name: str) -> None:
+        if name in self.scopes[-1]:
+            raise ValueError(f'symbol "{name}" redefined')
+        self.scopes[-1].add(name)
+
+    def decls(self, decls: list) -> None:
+        for d in decls:
+            kind, name = d[0], d[1]
+            if kind == "type":
+                if name in self.types:
+                    raise SyntaxError(f'symbol "{name}" redefined')
+                self.types[name] = _type_tuple(d[2])
+            elif kind == "op":
+                self.op_names.add(name)  # visible to its own body
+                self.user_ops[name] = (d[2], self.seq(d[3]))
+            elif kind == "func":
+                body = self.expr(d[3])
+                self.declare(name)
+                self.funcs[name] = (d[2], body)
+            else:
+                e = self.expr(d[2])
+                _const_dep_check(e, self.consts, name, self.types)
+                self.declare(name)
+                self.consts[name] = e
+
+    # --- operators
+    def op(self, n: dict) -> tuple:
+        return getattr(self, "op_" + n["k"])(n)
+
+    def op_Scope(self, n):
+        """A parenthesized scope: its consts and funcs shadow the outer
+        ones and are restored at the closing paren."""
+        body = n["body"]
+        if len(body) == 1 and body[0]["k"] == "OpExpr":
+            # a parenthesized search expression
+            return self.op_OpExpr({"expr": {"k": "Paren", "expr": body[0]["expr"]}})
+        saved_c, saved_f = dict(self.consts), dict(self.funcs)
+        self.scopes.append(set())
+        ops = self.seq(body)
+        self.scopes.pop()
+        local_c, local_f = (
+            {k: v for k, v in now.items() if saved.get(k, _SENTINEL) is not v}
+            for now, saved in ((self.consts, saved_c), (self.funcs, saved_f))
+        )
+        self.consts, self.funcs = saved_c, saved_f
+        return ("scope", ops, local_c, local_f)
+
+    def op_Pool(self, n):
+        """Pool, File and HTTP sources → ('from', name[, format])."""
+        kind, name = n.get("pool") or n.get("path") or n["url"]
+        if kind == "regexp":
+            name = "/" + name + "/"
+        if n.get("commit"):
+            name += "@" + n["commit"]
+        if n.get("meta"):
+            name += ":" + n["meta"]
+        fmt = n.get("format", "").strip('"')
+        return ("from", name, fmt) if fmt else ("from", name)
+
+    op_File = op_HTTP = op_Pool
+
+    def op_From(self, n):
+        legs = []
+        for src, sub in n["trunks"]:
+            name = self.op(src)[1]
+            if src["k"] == "Pool" and name == "pass":
+                name = None  # `pass` leg: the incoming stream
+            legs.append((name, None if sub is None else self.seq(sub)))
+        return ("frommulti", legs)
+
+    def op_Where(self, n):
+        return ("where", self.expr(n["expr"]))
+
+    def op_Search(self, n):
+        return ("where", self.search(n["expr"]))
+
+    def op_Assert(self, n):
+        return ("assert", self.expr(n["expr"]), n["text"])
+
+    def op_Cut(self, n):
+        return ("cut", self.cut_list(n["args"]))
+
+    def op_Put(self, n):
+        return ("put", self.put_list(n["args"]))
+
+    def op_Drop(self, n):
+        return ("drop", [".".join(self.static_path(e)) for e in n["args"]])
+
+    def op_Rename(self, n):
+        sides = [(self.rename_side(a["lhs"]), self.rename_side(a["rhs"])) for a in n["args"]]
+        return ("rename", sides)
+
+    def op_Summarize(self, n):
+        keys, every = self.keys(n["keys"])
+        return ("summarize", [self.agg(a) for a in n["aggs"]], keys, every)
+
+    def op_OpAssignment(self, n):
+        rhs = n["assigns"][0]["rhs"]
+        if rhs["k"] in ("Call", "Agg") and rhs["name"] in AGG_FNS:
+            return ("summarize", [self.agg(a) for a in n["assigns"]], [], None)
+        return ("put", self.put_list(n["assigns"]))
+
+    def op_Sort(self, n):
+        keys = [(self.expr(e), order) for e, order in n["args"]]
+        nulls = "first" if n["nullsfirst"] else n.get("nulls")
+        return ("sort", keys, n["reverse"], nulls)
+
+    def op_Head(self, n):
+        count = 1 if n["count"] is None else _const_int(self.expr(n["count"]))
+        return (n["k"].lower(), count)
+
+    op_Tail = op_Head
+
+    def op_Top(self, n):
+        return ("top", n["limit"], [self.expr(e) for e in n["args"]])
+
+    def op_Uniq(self, n):
+        return ("uniq", n["c"])
+
+    def op_Fuse(self, n):
+        return ("fuse",)
+
+    def op_Pass(self, n):
+        return ("pass",)
+
+    # the data path of debug is identity; its side channel isn't modelled
+    op_Debug = op_Pass
+
+    def op_Yield(self, n):
+        return ("yield", [self.expr(e) for e in n["exprs"]])
+
+    def op_Output(self, n):
+        return ("outputop", n["name"])
+
+    def op_Merge(self, n):
+        return ("merge", [self.expr(e) for e in n.get("exprs") or [n["expr"]]])
+
+    def op_Load(self, n):
+        ref = n["pool"] + ("@" + n["branch"] if n["branch"] else "")
+        return ("load", ref, n["author"], n["message"])
+
+    def op_Over(self, n):
+        exprs = [self.expr(e) for e in n["exprs"]]
+        e = exprs[0] if len(exprs) == 1 else ("overlist", exprs)
+        with_vars = [(name, self.expr(v)) for name, v in n["locals"]]
+        body = None if n["body"] is None else self.seq(n["body"])
+        return ("over", e, with_vars, body)
+
+    def op_Parallel(self, n):
+        legs = [self.seq(p) for p in n["paths"]]
+        if not legs:
+            raise SyntaxError("fork needs at least one '=> ...' leg")
+        return ("fork", legs)
+
+    def op_Switch(self, n):
+        sel = n["expr"]
+        if sel is not None:
+            # a bare path selector names a field: `switch a["b"] (`
+            parts, rest = self.path(sel) if _is_path(sel) else (None, True)
+            sel = ("field", parts) if not rest else self.expr(sel)
+        cases = [
+            (None if ce is None else self.expr(ce), self.seq(path))
+            for ce, path in n["cases"]
+        ]
         if not cases:
             raise SyntaxError("switch needs at least one case")
-        return ("switch", selector, cases)
+        return ("switch", sel, cases)
 
-    # --- join --------------------------------------------------------
-    def parse_join(self, kind: str = "inner") -> tuple:
-        """join [(right-subquery)] on lkey[=rkey] [cut-list].
+    def op_Join(self, n):
+        lk = self.join_key(n["lk"])
+        rk = lk if n["rk"] is None else self.join_key(n["rk"])
+        cut = self.cut_list(n["args"]) if n["args"] else []
+        sub = None if n["right"] is None else self.seq(n["right"])
+        return ("join", n["style"] or "inner", lk, rk, cut, sub)
 
-        Reference forms (runtime/sam/op/join/ztests): the right leg
-        may be a parenthesized subquery or, with no parens, the
-        second leg of an upstream fork / multi-source from; `on k`
-        joins on the same-named field both sides; either key may be a
-        parenthesized expression (`on s=(lower(s))`)."""
-        if self.peek().text == "kind":
-            self.next()
-            self.expect("=")
-            kind = self.next().text
-        sub = None
-        if self.accept("("):
-            sub = self.parse_pipeline()
-            self.expect(")")
-        self.expect("on")
+    def op_Explode(self, n):
+        name = "value" if n["as"] is None else ".".join(self.static_path(n["as"]))
+        exprs = [self.expr(e) for e in n["args"]]
+        return ("explode", exprs, _type_tuple(n["type"]), name)
 
-        def join_key():
-            if self.peek().text == "(":
-                self.next()
-                e = self.parse_expr()
-                self.expect(")")
-                return e
-            return ".".join(self.parse_path())
+    def op_Shaper(self, n):
+        return ("shapeop", n["op"], _type_tuple(n["type"]))
 
-        lk = join_key()
-        rk = join_key() if self.accept("=") else lk
-        cut = []
-        if not self.at_end_of_op():
-            cut = self.parse_assign_list()
-        return ("join", kind, lk, rk, cut, sub)
+    def op_OpExpr(self, n):
+        e = n["expr"]
+        if e["k"] in ("Call", "Agg"):
+            if e["name"] != "count" and e["name"] in self.op_names:
+                return ("opcall", e["name"], [self.expr(a) for a in e["args"]])
+            if e["name"] in AGG_FNS:
+                return ("summarize", [self.agg(_assign(None, e))], [], None)
+        leaves = list(_search_leaves(e))
+        leaf = leaves[0]
+        if e is leaf:
+            word = leaf.get("text") if leaf["k"] in ("Term", "Glob") else None
+            if word == "sample":
+                return ("sample",)  # one exemplar per value shape
+            if word in _SHAPERS or word == "*":
+                # bare normalization (one frame has one shape), and
+                # `*` alone, which matches everything
+                return ("pass",)
+        while e["k"] == "Paren":
+            e = e["expr"]
+        if e is leaf and _is_term(leaf):
+            s = self.search(leaf)
+            return ({"sglob": "searchglob", "sre": "searchre"}.get(s[0], "search"), s[1])
+        if len(leaves) > 1 or any(_is_term(x) for x in leaves):
+            return ("where", self.search(e))
+        x = self.expr(e)
+        if x[0] in ("record", "array", "set", "map"):
+            return ("yield", [x])
+        # implied where or yield: the compiler decides by static type
+        return ("exprop", x)
 
-    # --- lists -------------------------------------------------------
-    def parse_assign_list(self) -> list[tuple]:
-        """a.b, c:=d.e, c:=<expr> → [(path_or_expr_ast, alias|None)].
-        A plain right-hand field path stays a string; any other
-        expression rides as its AST tuple (reference cut accepts full
-        assignments, docs/language/operators/cut.md)."""
+    # --- assignment lists
+    def agg(self, a: dict) -> tuple:
+        name = None if a["lhs"] is None else ".".join(self.static_path(a["lhs"]))
+        rhs = a["rhs"]
+        fn = rhs.get("name") or rhs.get("text") or rhs["k"]
+        if rhs["k"] not in ("Call", "Agg") or fn not in AGG_FNS:
+            raise SyntaxError(f"unknown aggregate {fn!r}")
+        if rhs["k"] == "Agg":
+            arg = None if rhs["expr"] is None else self.expr(rhs["expr"])
+            return (name, fn, arg, self.expr(rhs["where"]))
+        if len(rhs["args"]) > 1:
+            raise SyntaxError(f"{fn}: expected one argument")
+        arg = self.expr(rhs["args"][0]) if rhs["args"] else None
+        return (name, fn, arg, None)
+
+    def keys(self, assigns: list):
+        keys, every = [], None
+        for a in assigns:
+            lhs, rhs = a["lhs"], a["rhs"]
+            if lhs is None and rhs["k"] == "Call" and rhs["name"] == "every":
+                every = rhs["args"][0].get("text")
+                continue
+            e = self.expr(rhs)
+            if lhs is not None:
+                keys.append((".".join(self.static_path(lhs)), e))
+            elif e[0] == "field":
+                # a dotted key keeps its nesting: `by rec.i` emits
+                # {rec:{i:...}} (groupby/ztests/key-in-record)
+                keys.append((".".join(e[1]), e))
+            elif e[0] == "call":
+                keys.append((e[1], e))  # named after the function (deriveAs)
+            else:
+                raise SyntaxError("group-by key expressions need a name (k:=expr)")
+        return keys, every
+
+    def put_list(self, assigns: list) -> list:
         out = []
-        while True:
-            if self.peek().kind == "ID" and self.peek(1).text == ":=":
-                alias = self.next().text
-                self.expect(":=")
-                e = self.parse_expr()
-                if self.peek().text == "where":
+        for a in assigns:
+            if a["lhs"] is None:
+                raise SyntaxError("put: expected ':='")
+            out.append((self.rename_side(a["lhs"], True), self.expr(a["rhs"])))
+        return out
+
+    def cut_list(self, assigns: list) -> list:
+        """cut/join lists: a.b, c:=d.e, c:=<expr> → [(path or expr
+        tuple, alias or None)] (docs/language/operators/cut.md)."""
+        out = []
+        for a in assigns:
+            lhs, rhs = a["lhs"], a["rhs"]
+            if lhs is not None and lhs["k"] == "ID":
+                if rhs["k"] == "Agg":
                     # per-agg where on a running aggregate
-                    # (cut sum:=sum(x) where c — agg.go filters)
-                    self.next()
-                    e = ("aggwhere", e, self.parse_expr())
-                if e[0] == "field":
-                    out.append((".".join(e[1]), alias))
+                    e = ("aggwhere", self.expr(rhs["call"]), self.expr(rhs["where"]))
                 else:
-                    out.append((e, alias))
-            elif self.peek().kind == "ID" and self.peek(1).text == "(":
-                # bare call: `cut split(s,".")` names the output after
-                # the function, like the reference's derived-name rule
-                # (semantic/expr.go deriveAs) — except quiet(a.b),
-                # which is transparent and targets the inner path
-                # (compiler/ztests/implied-quiet-assignment)
-                name = self.peek().text
-                e = self.parse_expr()
-                if (
-                    name == "quiet"
-                    and e[0] == "call"
-                    and e[1] == "quiet"
-                    and len(e[2]) == 1
-                    and e[2][0][0] == "field"
-                ):
+                    e = self.expr(rhs)
+                out.append((".".join(e[1]) if e[0] == "field" else e, lhs["name"]))
+            elif lhs is not None:
+                target = self.rename_side(lhs)
+                if not isinstance(target, tuple):
+                    raise SyntaxError("cut: a static path cannot be assigned")
+                out.append((("dyncut", target[1], self.expr(rhs)), None))
+            elif rhs["k"] in ("Call", "Grep"):
+                # bare call: the output is named after the function
+                # (deriveAs) — except quiet(a.b), which targets a.b
+                e = self.expr(rhs)
+                name = e[1]
+                if name == "quiet" and len(e[2]) == 1 and e[2][0][0] == "field":
                     name = ".".join(e[2][0][1])
                 out.append((e, name))
             else:
-                path = self.parse_path()
-                if self.peek().text == "[":
-                    segs, dyn = self._dyn_segments(path)
-                    if dyn:
-                        self.expect(":=")
-                        out.append(
-                            (("dyncut", segs, self.parse_expr()), None)
-                        )
-                        if not self.accept(","):
-                            break
-                        continue
-                    path = [
-                        n if "." not in n else f"`{n}`"
-                        for _k, n in segs
-                    ] or ["this"]
-                out.append((".".join(path), None))
-            if not self.accept(","):
-                break
+                target = self.rename_side(rhs)
+                if isinstance(target, tuple):
+                    raise SyntaxError("cut: expected ':='")
+                out.append((target, None))
         return out
 
-    def _looks_assignment(self) -> bool:
-        """Lookahead: an ID followed by a path (dots, brackets —
-        including dynamic `[expr]` steps) then ':=' is an implied-put
-        assignment (this[a][b] := ...)."""
-        j = 1
-        depth = 0
-        while j < 64:
-            t = self.peek(j)
-            if not t.text:
-                return False
-            if t.text == "[":
-                depth += 1
-            elif t.text == "]":
-                depth -= 1
-                if depth < 0:
-                    return False
-            elif depth == 0:
-                if t.text == ":=":
-                    return True
-                if t.text != "." and t.kind not in ("ID", "STR"):
-                    return False
-            j += 1
-        return False
+    def rename_side(self, e: dict, strip_this: bool = False):
+        """A target path as a dotted string, or ('dyn', segments) when
+        a step is a runtime `[expr]` (op/ztests/*-dynamic-field)."""
+        parts, rest = self.path(e)
+        if rest:
+            segs, dyn = self.dyn_segments(parts, rest)
+            if dyn:
+                return ("dyn", segs)
+            parts = [_backtick(s) for _k, s in segs] or ["this"]
+        if strip_this and parts[0] == "this" and len(parts) > 1:
+            parts = parts[1:]  # this["x.y"] / this.a address the same field
+        return ".".join(parts)
 
-    def _dyn_segments(self, first_parts: list[str]):
-        """Continue a target path across DYNAMIC `[expr]` steps
-        (runtime field names — op/ztests/*-dynamic-field). Returns
-        (segments, any_dynamic) where each segment is ('s', name) or
-        ('e', expr_ast)."""
-        segs: list[tuple] = [("s", p) for p in first_parts]
-        dyn = False
-        while self.peek().text == "[":
-            self.next()
-            e = self.parse_expr()
-            self.expect("]")
-            if e[0] == "str":
-                segs.append(("s", e[1]))
+    def join_key(self, e: dict):
+        if e["k"] == "Paren":
+            return self.expr(e["expr"])
+        return ".".join(self.static_path(e))
+
+    # --- paths
+    def path(self, e: dict):
+        """Split a target path into its leading static names — ids,
+        `.name`, `["str"]` and `[CONST]` steps — and the remaining
+        steps, which start at the first runtime `[expr]` index."""
+        steps = []
+        while e["k"] in ("Bin", "Index") and e.get("op", ".") == ".":
+            if e["k"] == "Bin":
+                steps.append(("s", e["rhs"]["name"]))
+                e = e["lhs"]
             else:
-                segs.append(("e", e))
-                dyn = True
-            while self.peek().text == "." and self.peek(1).kind == "ID":
-                self.next()
-                segs.append(("s", self.next().text))
+                steps.append(("e", e["index"]))
+                e = e["expr"]
+        steps.reverse()
+        if e["k"] not in ("ID", "Term"):
+            raise SyntaxError(f"expected a field path, got {e['k']}")
+        parts = [e.get("name") or e.get("text")]
+        for i, (kind, v) in enumerate(steps):
+            if kind == "s":
+                parts.append(v)
+            elif v["k"] == "Prim" and v["type"] == "string":
+                parts.append(_backtick(v["text"]))
+            elif v["k"] == "ID" and v["name"] in self.consts:
+                # rec[constName] — const string keys resolve here
+                # (compiler/ztests/path-index-const)
+                cv = self.consts[v["name"]]
+                if cv[0] != "str":
+                    raise SyntaxError("path index const must be a string")
+                parts.append(_backtick(cv[1]))
+            else:
+                return parts, steps[i:]
+        return parts, []
+
+    def static_path(self, e: dict) -> list[str]:
+        parts, rest = self.path(e)
+        if rest:
+            raise SyntaxError("expected a static field path")
+        return parts
+
+    def dyn_segments(self, parts: list[str], rest: list):
+        """Segments of a path with runtime `[expr]` steps: ('s', name)
+        or ('e', expr) each, and whether any step is dynamic."""
+        segs = [("s", p) for p in parts]
+        for kind, v in rest:
+            e = v if kind == "s" else self.expr(v)
+            segs.append(("s", e) if kind == "s" else ("s", e[1]) if e[0] == "str" else ("e", e))
         if segs and segs[0] == ("s", "this"):
             segs = segs[1:]
-        return segs, dyn
+        return segs, any(k == "e" for k, _v in segs)
 
-    def parse_put_list(self) -> list[tuple]:
-        out = []
-        while True:
-            path = self.parse_path()
-            if self.peek().text == "[":
-                segs, dyn = self._dyn_segments(path)
-                if dyn:
-                    self.expect(":=")
-                    out.append((("dyn", segs), self.parse_expr()))
-                    if not self.accept(","):
-                        break
-                    continue
-                path = [
-                    n if "." not in n else f"`{n}`"
-                    for _k, n in segs
-                ] or ["this"]
-            if path[0] == "this" and len(path) > 1:
-                # this["x.y"] / this.a targets address the same field
-                path = path[1:]
-            self.expect(":=")
-            out.append((".".join(path), self.parse_expr()))
-            if not self.accept(","):
-                break
-        return out
+    # --- search expressions
+    def search(self, e: dict) -> tuple:
+        k = e["k"]
+        if k == "Bin" and e["op"] in ("and", "or"):
+            return ("bin", e["op"], self.search(e["lhs"]), self.search(e["rhs"]))
+        if k == "Unary" and e["op"] == "!":
+            return ("un", "not", self.search(e["operand"]))
+        if k == "Paren":
+            return self.search(e["expr"])
+        if k == "Term" and _NET_RE.fullmatch(e["text"]):
+            return ("snet", e["text"])
+        if k == "Term":
+            return ("sterm", re.sub(r"\\(.)", r"\1", e["text"]))
+        if k == "Glob":
+            return ("sglob", e["text"])
+        if k == "Regexp":
+            return ("sre", e["pattern"])
+        if _is_term(e):
+            return ("sterm", e.get("text") or ".".join(_dotted(e)))
+        return self.expr(e)
 
-    def parse_path_list(self) -> list[str]:
-        out = [".".join(self.parse_path())]
-        while self.accept(","):
-            out.append(".".join(self.parse_path()))
-        return out
+    # --- expressions
+    def expr(self, e: dict) -> tuple:
+        return getattr(self, "x_" + e["k"])(e)
 
-    def parse_path(self) -> list[str]:
-        parts = [self.next().text]
-        while True:
-            if self.peek().text == "." and self.peek(1).kind == "ID":
-                self.next()
-                parts.append(self.next().text)
-            elif self.peek().text == "[" and self.peek(1).kind == "STR":
-                # rec['bar'] — quoted-key path step (same field
-                # reference as rec.bar; docs/language/pipeline-model).
-                # Names containing dots backtick-quote so the dotted
-                # path string stays unambiguous (schema.split_path)
-                self.next()
-                name = self.next().text[1:-1]
-                parts.append(f"`{name}`" if "." in name else name)
-                self.expect("]")
-            elif (
-                self.peek().text == "["
-                and self.peek(1).kind == "ID"
-                and self.peek(1).text in self.consts
-                and self.peek(2).text == "]"
-            ):
-                # rec[constName] — const string keys resolve at
-                # compile time (compiler/ztests/path-index-const)
-                self.next()
-                cv = self.consts[self.next().text]
-                self.expect("]")
-                if not (isinstance(cv, tuple) and cv[0] == "str"):
-                    raise SyntaxError("path index const must be a string")
-                name = cv[1]
-                parts.append(f"`{name}`" if "." in name else name)
-            else:
-                return parts
-
-    # --- expressions -------------------------------------------------
-    def parse_expr(self):
-        return self.parse_cond()
-
-    def parse_cond(self):
-        c = self.parse_or()
-        if self.accept("?"):
-            t = self.parse_expr()
-            self.expect(":")
-            f = self.parse_expr()
-            return ("cond", c, t, f)
-        return c
-
-    def parse_or(self):
-        l = self.parse_and()
-        while self.peek().text in ("or", "OR"):
-            self.next()
-            l = ("bin", "or", l, self.parse_and())
-        return l
-
-    def parse_and(self):
-        l = self.parse_not()
-        while self.peek().text in ("and", "AND"):
-            self.next()
-            l = ("bin", "and", l, self.parse_not())
-        return l
-
-    def parse_not(self):
-        if self.accept("!") or self.peek().text in ("not", "NOT"):
-            if self.peek().text in ("not", "NOT"):
-                self.next()
-            return ("un", "not", self.parse_not())
-        return self.parse_cmp()
-
-    def parse_cmp(self):
-        l = self.parse_add()
-        op = self.peek().text
-        if op in ("==", "!=", "<", "<=", ">", ">="):
-            self.next()
-            return ("bin", op, l, self.parse_add())
-        if op in ("~", "!~"):
-            # regexp match: e ~ /re/ (docs/language/expressions.md);
-            # the lexer emits the REGEX literal contextually
-            self.next()
-            t = self.next()
-            if t.kind == "REGEX":
-                pat = t.text[1:-1]
-            elif t.kind == "STR":
-                pat = t.text[1:-1]
-            else:
-                raise SyntaxError(f"expected /regexp/ after {op!r} at {t.pos}")
-            e = ("regexmatch", l, pat)
-            return ("un", "not", e) if op == "!~" else e
-        if op == "in":
-            self.next()
-            return ("in", l, self.parse_add())
-        return l
-
-    def parse_add(self):
-        l = self.parse_mul()
-        while self.peek().text in ("+", "-"):
-            op = self.next().text
-            l = ("bin", op, l, self.parse_mul())
-        return l
-
-    def parse_mul(self):
-        l = self.parse_unary()
-        while self.peek().text in ("*", "/", "%"):
-            op = self.next().text
-            l = ("bin", op, l, self.parse_unary())
-        return l
-
-    def parse_unary(self):
-        if self.accept("-"):
-            return ("un", "-", self.parse_unary())
-        return self.parse_postfix()
-
-    def parse_postfix(self):
-        e = self.parse_primary()
-        while True:
-            if self.peek().text == "[":
-                self.next()
-                if self.accept(":"):
-                    hi = None if self.peek().text == "]" else self.parse_expr()
-                    self.expect("]")
-                    e = ("slice", e, None, hi)
-                else:
-                    lo = self.parse_expr()
-                    if self.accept(":"):
-                        hi = None if self.peek().text == "]" else self.parse_expr()
-                        self.expect("]")
-                        e = ("slice", e, lo, hi)
-                    else:
-                        self.expect("]")
-                        e = ("index", e, lo)
-            elif self.peek().text == "." and self.peek(1).kind == "ID":
-                self.next()
-                f = self.next().text
-                if e[0] == "field":
-                    e = ("field", e[1] + [f])
-                else:
-                    e = ("getfield", e, f)
-            elif e[0] == "typeval" and self.peek().text == "(":
-                # type-value call <port>(80) ≡ cast(80, <port>)
-                # (expressions.md casts; compiler/ztests/cast.yaml)
-                self.next()
-                arg = self.parse_expr()
-                self.expect(")")
-                e = ("call", "cast", [arg, e])
-            else:
-                return e
-
-    def _array_item(self):
-        if self.accept("..."):
-            # array spread [...a, 1] concatenates (expressions.md)
-            return ("spread", self.parse_expr())
-        return self.parse_expr()
-
-    def parse_primary(self):
-        t = self.next()
-        if t.kind == "NUM":
-            return ("num", float(t.text) if "." in t.text else int(t.text))
-        if t.kind == "IP":
-            # ip/net literals ride as canonical strings (SURVEY §1.2)
-            return ("str", t.text)
-        if t.kind == "STR":
-            return ("str", t.text[1:-1])
-        if t.kind == "FSTR":
-            return self._fstring(t.text)
-        if t.kind == "TIME":
+    def x_Prim(self, e):
+        typ, text = e["type"], e["text"]
+        if typ == "int64":
+            return ("num", int(text))
+        if typ == "float64":
+            return ("num", float(text))
+        if typ in ("bool", "null"):
+            return ("null",) if typ == "null" else ("bool", text == "true")
+        if typ == "time" and text[:4].isdigit() and int(text[:4]) > 2262:
             # nano.Ts is int64 ns — times past 2262-04-11T23:47:16Z
             # overflow (zson time-overflow ztest)
-            if t.text[:4].isdigit() and int(t.text[:4]) > 2262:
-                raise SyntaxError(
-                    f"time overflow: {t.text} (max: 2262-04-11T23:47:16Z)"
-                )
-            return ("time", t.text)
-        if t.kind == "DUR":
-            return ("dur", t.text)
-        if t.text == "true":
-            return ("bool", True)
-        if t.text == "false":
-            return ("bool", False)
-        if t.text == "null":
-            return ("null",)
-        if t.text == "this":
-            return ("this",)
-        if t.text == "<":
-            # type value literal: <int64>, <[string]>, <{a:int64}>
-            # (docs/language/expressions.md type values)
-            ty = self.parse_type_expr()
-            self.expect(">")
-            return ("typeval", ty)
-        if t.text == "(":
-            if self.peek().text == "over":
-                # lateral subquery as an expression (reference
-                # OverExpr, ast/ast.go): (over e | where .. | sum(this))
-                ops = self.parse_pipeline()
-                self.expect(")")
-                return ("overexpr", ops)
-            e = self.parse_expr()
-            self.expect(")")
-            return e
-        if t.text == "[":
-            items = []
-            if self.peek().text != "]":
-                items.append(self._array_item())
-                while self.accept(","):
-                    items.append(self._array_item())
-            self.expect("]")
-            return ("array", items)
-        if t.text == "|":
-            # set |[ ... ]| / map |{ k:v, ... }| literals (zson.md)
-            if self.accept("["):
-                items = []
-                if self.peek().text != "]":
-                    items.append(self._array_item())
-                    while self.accept(","):
-                        items.append(self._array_item())
-                self.expect("]")
-                self.expect("|")
-                return ("set", items)
-            self.expect("{")
-            pairs = []
-            if self.peek().text != "}":
-                while True:
-                    k = self.parse_expr()
-                    self.expect(":")
-                    pairs.append((k, self.parse_expr()))
-                    if not self.accept(","):
-                        break
-            self.expect("}")
-            self.expect("|")
-            return ("map", pairs)
-        if t.text == "{":
-            fields = []
-            if self.peek().text != "}":
-                while True:
-                    if self.accept("..."):
-                        # record spread {...r, a:1} (expressions.md)
-                        fields.append((None, ("spread", self.parse_expr())))
-                    else:
-                        name = self.next()
-                        if name.kind == "STR":
-                            fname = name.text[1:-1]
-                        else:
-                            fname = name.text
-                        if self.peek().text == ":":
-                            self.next()
-                            fields.append((fname, self.parse_expr()))
-                        else:
-                            # shorthand {a} ≡ {a:a}
-                            fields.append((fname, ("field", [fname])))
-                    if not self.accept(","):
-                        break
-            self.expect("}")
-            seen = set()
-            for fname, _e in fields:
-                if fname is not None:
-                    if fname in seen:
-                        # semantic/expr.go: record expressions reject
-                        # duplicate fields at compile time
-                        raise SyntaxError(
-                            f'record expression: duplicate field: "{fname}"'
-                        )
-                    seen.add(fname)
-            return ("record", fields)
-        if t.kind == "ID":
-            if self.peek().text == "(":
-                self.next()
-                args = []
-                if t.text == "grep" and self.peek().text != ")" and (
-                    self.peek().text == "*"
-                    or (
-                        self.peek().kind in ("ID", "NUM")
-                        and self.peek(1).text in ("*", "?")
-                    )
-                ):
-                    # bare glob pattern argument: grep(*foo*)
-                    # (search-expr.md grep; compiler/ztests/
-                    # regexp-search) — raw tokens concatenate until
-                    # ',' or ')'
-                    parts = []
-                    while self.peek().text not in (",", ")"):
-                        parts.append(self.next().text)
-                    args.append(("glob", "".join(parts)))
-                    while self.accept(","):
-                        args.append(self.parse_expr())
-                    self.expect(")")
-                    return ("call", t.text, args)
-                if self.peek().text != ")":
-                    args.append(self.parse_expr())
-                    while self.accept(","):
-                        args.append(self.parse_expr())
-                self.expect(")")
-                return ("call", t.text, args)
-            return ("field", [t.text])
-        if t.kind == "REGEX":
-            # /re/ literal in argument position (grep(/foo|baz/),
-            # regexp(/re/, s) — docs/language/functions/regexp.md);
-            # rides as a string node tagged "re" so pattern-consuming
-            # functions keep regex semantics while generic string
-            # contexts see the pattern text
-            return ("str", t.text[1:-1], "re")
-        raise SyntaxError(f"unexpected token {t.text!r} at {t.pos}")
+            raise SyntaxError(f"time overflow: {text} (max: 2262-04-11T23:47:16Z)")
+        if typ in ("time", "duration"):
+            return ("time" if typ == "time" else "dur", text)
+        # strings, and ip/net literals as canonical strings (SURVEY §1.2)
+        return ("str", text)
+
+    def x_ID(self, e):
+        return ("this",) if e["name"] == "this" else ("field", [e["name"]])
+
+    def x_Term(self, e):
+        return ("field", [e["text"]])
+
+    def x_Glob(self, e):
+        return ("glob", e["text"])
+
+    def x_Regexp(self, e):
+        # a /re/ literal rides as a string tagged "re": pattern-consuming
+        # functions keep regex semantics (docs/language/functions/regexp.md)
+        return ("str", e["pattern"], "re")
+
+    def x_Paren(self, e):
+        return self.expr(e["expr"])
+
+    def x_Unary(self, e):
+        return ("un", "not" if e["op"] == "!" else e["op"], self.expr(e["operand"]))
+
+    def x_Bin(self, e):
+        op, lhs = e["op"], self.expr(e["lhs"])
+        if op == ".":
+            name = e["rhs"]["name"]
+            if lhs[0] == "field":
+                return ("field", lhs[1] + [name])
+            return ("getfield", lhs, name)
+        if op in ("~", "!~"):
+            rhs = e["rhs"]
+            m = ("regexmatch", lhs, rhs.get("pattern", rhs.get("text")))
+            return ("un", "not", m) if op == "!~" else m
+        if op == "in":
+            return ("in", lhs, self.expr(e["rhs"]))
+        return ("bin", op, lhs, self.expr(e["rhs"]))
+
+    def x_Cond(self, e):
+        return ("cond", self.expr(e["cond"]), self.expr(e["then"]), self.expr(e["else"]))
+
+    def x_Call(self, e):
+        return ("call", e["name"], [self.expr(a) for a in e["args"]])
+
+    def x_Agg(self, e):
+        return ("aggwhere", self.expr(e["call"]), self.expr(e["where"]))
+
+    def x_Grep(self, e):
+        args = [e["pattern"]] + ([] if e["expr"] is None else [e["expr"]])
+        return ("call", "grep", [self.expr(a) for a in args])
+
+    def x_Index(self, e):
+        return ("index", self.expr(e["expr"]), self.expr(e["index"]))
+
+    def x_Slice(self, e):
+        lo, hi = (None if x is None else self.expr(x) for x in (e["from"], e["to"]))
+        return ("slice", self.expr(e["expr"]), lo, hi)
+
+    def x_Record(self, e):
+        fields = []
+        for elem in e["elems"]:
+            if elem[0] == "spread":
+                fields.append((None, ("spread", self.expr(elem[1]))))
+            elif elem[0] == "id":
+                fields.append((elem[1], ("field", [elem[1]])))
+            else:
+                fields.append((elem[1], self.expr(elem[2])))
+        names = [name for name, _v in fields if name is not None]
+        for i, name in enumerate(names):
+            if name in names[:i]:
+                # semantic/expr.go: record expressions reject duplicate
+                # fields at compile time
+                raise SyntaxError(f'record expression: duplicate field: "{name}"')
+        return ("record", fields)
+
+    def vector(self, elems: list) -> list:
+        return [
+            ("spread", self.expr(v)) if kind == "spread" else self.expr(v)
+            for kind, v in elems
+        ]
+
+    def x_Array(self, e):
+        return ("array", self.vector(e["elems"]))
+
+    def x_Set(self, e):
+        return ("set", self.vector(e["elems"]))
+
+    def x_Map(self, e):
+        return ("map", [(self.expr(k), self.expr(v)) for k, v in e["entries"]])
+
+    def x_TypeValue(self, e):
+        return ("typeval", _type_tuple(e["text"]))
+
+    def x_Cast(self, e):
+        # <port>(80) ≡ cast(80, <port>) (expressions.md casts)
+        return ("call", "cast", [self.expr(e["expr"]), self.x_TypeValue(e["type"])])
+
+    def x_FString(self, e):
+        return ("fstr", [
+            _fstring_text(v) if kind == "text" else self.expr(v)
+            for kind, v in e["parts"]
+        ])
+
+    def x_OverExpr(self, e):
+        over = self.op_Over({**e, "body": None})
+        return ("overexpr", [over] + self.seq(e["body"]))
 
 
-class _NotAggs(Exception):
-    pass
+def lower(seq: list) -> list[tuple]:
+    """Lower the dict AST to the compiler's tuple AST."""
+    return _Lower().run(seq)
 
 
 def parse(src: str) -> list[tuple]:
-    """Returns the op list; if the query opens with declarations
-    (`func name(params): (expr)` / `const name = expr`, reference:
-    FuncDecl/ConstDecl semantic/op.go:855+), the first element is
-    ('decls', {funcs}, {consts})."""
-    p = Parser(src)
-    ops = p.parse_pipeline()
-    if p.peek().kind != "EOF":
-        raise SyntaxError(f"trailing input at {p.peek().pos}: {p.peek().text!r}")
-    if p.funcs or p.consts or p.user_ops or p.types:
-        return [("decls", p.funcs, p.consts, p.user_ops, p.types)] + ops
-    return ops
+    """Parse query text into the compiler's tuple AST. If the query
+    declares funcs, consts, ops or types, the first element is
+    ('decls', funcs, consts, user_ops, types)."""
+    return lower(parse_ast(src))

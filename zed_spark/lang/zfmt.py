@@ -3,9 +3,9 @@
 `super dev compile -C` parses a query and prints the AST back as
 canonical zed text; `-C -s` prints the semantically analyzed DAG;
 `-C -O` the optimized DAG; `-C -P N` the parallelized DAG.  This
-module re-implements that surface for the PySpark engine: a raw
-surface-fidelity parser (reusing the lexer), a semantic normalizer,
-a tiny optimizer/parallelizer mimic, and the two printers.
+module re-implements that surface for the PySpark engine over the
+dict AST of the engine's one parser (`parser.parse_ast`): a semantic
+normalizer, a tiny optimizer/parallelizer mimic, and the two printers.
 
 Reference semantics (independent implementation, no code copied):
   zfmt/ast.go (canonical AST print), zfmt/dag.go (DAG print),
@@ -15,15 +15,15 @@ Reference semantics (independent implementation, no code copied):
   compiler/optimizer (filter merge/pushdown, pass removal),
   compiler/parallelizer (scatter/merge/combine split).
 
-The raw AST here is dicts {"k": kind, ...} mirroring the reference
-ast package shapes; the DAG is the same dicts after normalization.
+The AST is dicts {"k": kind, ...} mirroring the reference ast
+package shapes; the DAG is the same dicts after normalization.
 """
 
 from __future__ import annotations
 
 import re
 
-from zed_spark.lang.lexer import Token, tokenize
+from zed_spark.lang.parser import _AGG_NAMES, _is_agg_call, parse_ast
 
 # ---------------------------------------------------------------------------
 # formatter (zfmt/format.go mechanics)
@@ -86,962 +86,8 @@ def _quoted_string(s: str) -> str:
     return '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
 
 
-# ---------------------------------------------------------------------------
-# raw parser
-
-_AGG_NAMES = {
-    "count", "sum", "avg", "min", "max", "any", "dcount", "collect",
-    "union", "and", "or", "collect_map", "fuse", "countdistinct",
-    "first", "last",
-}
-
-_OP_KEYWORDS = {
-    "from", "file", "get", "where", "search", "cut", "drop", "put",
-    "rename", "summarize", "sort", "head", "tail", "top", "uniq",
-    "fuse", "yield", "over", "join", "switch", "fork", "merge",
-    "pass", "output", "debug", "load", "assert", "shape", "sample",
-    "inner", "left", "right", "anti",
-}
-
-_CMP_OPS = {"==", "!=", "<", "<=", ">", ">=", "in"}
-
-
 class ZfmtError(ValueError):
     pass
-
-
-def _mask_urls(src: str) -> str:
-    """Replace bare (unquoted) http(s)://... runs with a same-length
-    identifier so the lexer doesn't read `//` as a comment; _pattern
-    slices the ORIGINAL source text back out by token position."""
-    out = []
-    i = 0
-    n = len(src)
-    while i < n:
-        ch = src[i]
-        if ch in "\"'":
-            j = i + 1
-            while j < n and src[j] != ch:
-                if src[j] == "\\":
-                    j += 1
-                j += 1
-            out.append(src[i : j + 1])
-            i = j + 1
-            continue
-        m = re.match(r"https?://[^\s|)]*", src[i:])
-        if m:
-            out.append("U" * len(m.group()))
-            i += len(m.group())
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-class _RawParser:
-    """Surface-fidelity recursive-descent parser: keeps literal text,
-    the explicit/implied distinction (head vs head 1), and search
-    terms, so the canonical print round-trips (zfmt/ztests)."""
-
-    def __init__(self, src: str):
-        self.src = src
-        self.toks = tokenize(_mask_urls(src))
-        self.i = 0
-        # inside a from-block trunk, a bare file/get/pool keyword
-        # starts the NEXT trunk (parser.peg from-block scoping)
-        self.trunk_depth = 0
-
-    # --- token helpers
-    def peek(self, k: int = 0) -> Token:
-        j = min(self.i + k, len(self.toks) - 1)
-        return self.toks[j]
-
-    def next(self) -> Token:
-        t = self.toks[self.i]
-        if t.kind != "EOF":
-            self.i += 1
-        return t
-
-    def at(self, text: str) -> bool:
-        return self.peek().text == text and self.peek().kind in ("OP", "ID")
-
-    def eat(self, text: str) -> bool:
-        if self.at(text):
-            self.next()
-            return True
-        return False
-
-    def expect(self, text: str):
-        if not self.eat(text):
-            raise ZfmtError(
-                f"expected {text!r} at {self.peek().text!r} (pos {self.peek().pos})"
-            )
-
-    def done(self) -> bool:
-        return self.peek().kind == "EOF"
-
-    # --- entry
-    def parse(self) -> list:
-        seq = self.seq(top=True)
-        if not self.done():
-            raise ZfmtError(f"trailing input at {self.peek().text!r}")
-        return seq
-
-    def seq(self, top: bool = False) -> list:
-        decls = self.decls()
-        ops = [self.op()]
-        while self.eat("|") or self.eat("|>"):
-            ops.append(self.op())
-        if decls:
-            return [{"k": "Scope", "decls": decls, "body": ops}]
-        return ops
-
-    # --- decls
-    def decls(self) -> list:
-        out = []
-        while True:
-            t = self.peek()
-            if t.kind != "ID":
-                break
-            if t.text == "const":
-                self.next()
-                name = self.next().text
-                self.expect("=")
-                out.append(("const", name, self.expr()))
-            elif t.text == "func":
-                self.next()
-                name = self.next().text
-                self.expect("(")
-                params = []
-                while not self.eat(")"):
-                    if params:
-                        self.expect(",")
-                    params.append(self.next().text)
-                self.expect(":")
-                self.expect("(")
-                body = self.expr()
-                self.expect(")")
-                out.append(("func", name, params, body))
-            elif t.text == "op" and self.peek(1).kind == "ID":
-                self.next()
-                name = self.next().text
-                self.expect("(")
-                params = []
-                while not self.eat(")"):
-                    if params:
-                        self.expect(",")
-                    params.append(self.next().text)
-                self.expect(":")
-                self.expect("(")
-                body = self.seq()
-                self.expect(")")
-                out.append(("op", name, params, body))
-            elif t.text == "type" and self.peek(1).kind == "ID" and (
-                self.peek(2).text == "="
-            ):
-                self.next()
-                name = self.next().text
-                self.expect("=")
-                out.append(("type", name, self.type_text()))
-            else:
-                break
-        return out
-
-    def type_text(self) -> str:
-        """Consume a type expression, returning its raw source text."""
-        start = self.peek().pos
-        depth = 0
-        end = start
-        while not self.done():
-            t = self.peek()
-            if depth == 0 and t.text in ("|",) and t.kind == "OP":
-                break
-            if t.text in ("{", "[", "(", "<"):
-                depth += 1
-            elif t.text in ("}", "]", ")", ">"):
-                if depth == 0:
-                    break
-                depth -= 1
-            end = t.pos + len(t.text)
-            self.next()
-            if depth == 0 and self.peek().kind == "ID" and (
-                self.peek().pos > end
-            ):
-                break
-        return self.src[start:end]
-
-    # --- operators
-    def op(self) -> dict:
-        t = self.peek()
-        if t.kind == "ID":
-            m = getattr(self, "op_" + t.text, None)
-            if t.text in _OP_KEYWORDS and m is not None:
-                # keyword ops; but `put(...)` etc as call would be odd
-                return m()
-        if t.text == "(" and t.kind == "OP":
-            # parenthesized scoped sub-sequence
-            self.next()
-            body = self.seq()
-            self.expect(")")
-            if len(body) == 1 and body[0]["k"] == "Scope":
-                return body[0]
-            return {"k": "Scope", "decls": [], "body": body}
-        return self.op_expr()
-
-    def op_from(self) -> dict:
-        self.expect("from")
-        if self.at("("):
-            self.next()
-            trunks = []
-            while not self.eat(")"):
-                src = self.source()
-                sub = None
-                if self.eat("=>"):
-                    sub = self.trunk_seq()
-                trunks.append((src, sub))
-            return {"k": "From", "trunks": trunks}
-        return self.pool_source()
-
-    def trunk_seq(self) -> list:
-        """Ops inside a from-trunk: ends at the next source keyword or `)`."""
-        self.trunk_depth += 1
-        try:
-            ops = [self.op()]
-            while self.eat("|"):
-                ops.append(self.op())
-            return ops
-        finally:
-            self.trunk_depth -= 1
-
-    def source(self) -> dict:
-        t = self.peek()
-        if t.text == "file":
-            return self.file_source()
-        if t.text == "get":
-            return self.get_source()
-        if t.text == "pool":
-            self.next()
-            return self.pool_source(keyword=False)
-        return self.pool_source(keyword=False)
-
-    def _pattern(self, stops: tuple = ()):
-        """A source pattern: quoted string, glob, regexp, or a run of
-        ADJACENT tokens (no intervening whitespace) sliced raw from
-        the source so URLs like http://host/path stay intact.  Pools
-        pass stops=("@", ":") so name@commit:meta splits."""
-        t = self.peek()
-        if t.kind == "STR":
-            self.next()
-            return ("string", t.text[1:-1])
-        if t.kind == "REGEX":
-            self.next()
-            return ("regexp", t.text[1:-1])
-        start = t.pos
-        end = t.pos
-        while not self.done():
-            t = self.peek()
-            if end != start and t.pos != end:
-                break  # whitespace gap ends the pattern
-            if t.kind == "OP" and t.text in ("|", ")", "=>"):
-                break
-            if end != start and t.kind == "OP" and t.text in stops:
-                break
-            self.next()
-            end = t.pos + len(t.text)
-        text = self.src[start:end]
-        if not text:
-            raise ZfmtError("empty source pattern")
-        if "*" in text:
-            return ("glob", text)
-        return ("string", text)
-
-    def pool_source(self, keyword: bool = True) -> dict:
-        pat = self._pattern(stops=("@", ":"))
-        commit = ""
-        meta = ""
-        if self.eat("@"):
-            commit = self._pattern(stops=(":",))[1]
-        if self.at(":") and self.peek(1).kind == "ID":
-            self.next()
-            meta = self.next().text
-        return {"k": "Pool", "pool": pat, "commit": commit, "meta": meta}
-
-    def op_file(self) -> dict:
-        return self.file_source()
-
-    def file_source(self) -> dict:
-        self.expect("file")
-        pat = self._pattern()
-        fmt = ""
-        if self.at("format"):
-            self.next()
-            fmt = self.next().text
-        return {"k": "File", "path": pat, "format": fmt}
-
-    def op_get(self) -> dict:
-        return self.get_source()
-
-    def get_source(self) -> dict:
-        self.expect("get")
-        pat = self._pattern()
-        node = {"k": "HTTP", "url": pat, "format": "", "method": "",
-                "headers": None, "body": ""}
-        while True:
-            t = self.peek()
-            if t.kind == "ID" and t.text == "format":
-                self.next()
-                node["format"] = self.next().text
-            elif t.kind == "ID" and t.text == "method":
-                self.next()
-                nt = self.next()
-                node["method"] = nt.text[1:-1] if nt.kind == "STR" else nt.text
-            elif t.kind == "ID" and t.text == "headers":
-                self.next()
-                node["headers"] = self.expr()
-            elif t.kind == "ID" and t.text == "body":
-                self.next()
-                nt = self.next()
-                node["body"] = nt.text[1:-1] if nt.kind == "STR" else nt.text
-            else:
-                break
-        return node
-
-    def op_where(self) -> dict:
-        self.expect("where")
-        return {"k": "Where", "expr": self.expr()}
-
-    def op_search(self) -> dict:
-        self.expect("search")
-        return {"k": "Search", "expr": self.search_expr()}
-
-    def op_cut(self) -> dict:
-        self.expect("cut")
-        return {"k": "Cut", "args": self.assignments()}
-
-    def op_drop(self) -> dict:
-        self.expect("drop")
-        return {"k": "Drop", "args": self.expr_list()}
-
-    def op_put(self) -> dict:
-        self.expect("put")
-        return {"k": "Put", "args": self.assignments()}
-
-    def op_rename(self) -> dict:
-        self.expect("rename")
-        return {"k": "Rename", "args": self.assignments()}
-
-    def op_summarize(self) -> dict:
-        self.expect("summarize")
-        return self._summarize_body()
-
-    def _summarize_body(self) -> dict:
-        aggs = self.assignments()
-        keys = []
-        if self.eat("by"):
-            keys = self.assignments()
-        return {"k": "Summarize", "aggs": aggs, "keys": keys, "limit": 0}
-
-    def op_sort(self) -> dict:
-        self.expect("sort")
-        rev = False
-        nullsfirst = False
-        while True:
-            if self.at("-") and self.peek(1).text == "r":
-                self.next()
-                self.next()
-                rev = True
-            elif self.at("-") and self.peek(1).text == "nulls":
-                self.next()
-                self.next()
-                nullsfirst = self.next().text == "first"
-            else:
-                break
-        args = []
-        if not self._at_op_end():
-            while True:
-                e = self.expr()
-                order = None
-                if self.peek().kind == "ID" and self.peek().text in (
-                    "asc", "desc",
-                ):
-                    order = self.next().text
-                args.append((e, order))
-                if not self.eat(","):
-                    break
-        return {"k": "Sort", "reverse": rev, "nullsfirst": nullsfirst,
-                "args": args}
-
-    def _at_op_end(self) -> bool:
-        t = self.peek()
-        if self.trunk_depth and t.kind == "ID" and t.text in (
-            "file", "get", "pool",
-        ):
-            return True
-        return t.kind == "EOF" or (
-            t.kind == "OP" and t.text in ("|", ")", "=>")
-        ) or (t.kind == "ID" and t.text in ("case", "default"))
-
-    def op_head(self) -> dict:
-        self.expect("head")
-        count = None if self._at_op_end() else self.expr()
-        return {"k": "Head", "count": count}
-
-    def op_tail(self) -> dict:
-        self.expect("tail")
-        count = None if self._at_op_end() else self.expr()
-        return {"k": "Tail", "count": count}
-
-    def op_top(self) -> dict:
-        self.expect("top")
-        limit = 0
-        if self.peek().kind == "NUM":
-            limit = int(self.next().text)
-        args = []
-        if not self._at_op_end():
-            args = self.expr_list()
-        return {"k": "Top", "limit": limit, "flush": False, "args": args}
-
-    def op_uniq(self) -> dict:
-        self.expect("uniq")
-        c = False
-        if self.at("-") and self.peek(1).text == "c":
-            self.next()
-            self.next()
-            c = True
-        return {"k": "Uniq", "c": c}
-
-    def op_fuse(self) -> dict:
-        self.expect("fuse")
-        return {"k": "Fuse"}
-
-    def op_pass(self) -> dict:
-        self.expect("pass")
-        return {"k": "Pass"}
-
-    def op_yield(self) -> dict:
-        self.expect("yield")
-        return {"k": "Yield", "exprs": self.expr_list()}
-
-    def op_output(self) -> dict:
-        self.expect("output")
-        return {"k": "Output", "name": self.next().text}
-
-    def op_debug(self) -> dict:
-        self.expect("debug")
-        e = None if self._at_op_end() else self.expr()
-        return {"k": "Debug", "expr": e}
-
-    def op_merge(self) -> dict:
-        self.expect("merge")
-        return {"k": "Merge", "expr": self.expr()}
-
-    def op_load(self) -> dict:
-        self.expect("load")
-        t = self.next()
-        pool = t.text[1:-1] if t.kind == "STR" else t.text
-        node = {"k": "Load", "pool": pool, "branch": "", "author": "",
-                "message": "", "meta": ""}
-        if self.eat("@"):
-            node["branch"] = self.next().text
-        for kw in ("author", "message", "meta"):
-            if self.peek().kind == "ID" and self.peek().text == kw:
-                self.next()
-                t = self.next()
-                node[kw] = t.text[1:-1] if t.kind == "STR" else t.text
-        return node
-
-    def op_over(self) -> dict:
-        self.expect("over")
-        exprs = [self.expr()]
-        while self.eat(","):
-            exprs.append(self.expr())
-        locals_ = []
-        if self.peek().kind == "ID" and self.peek().text == "with":
-            self.next()
-            while True:
-                name = self.next().text
-                self.expect("=")
-                locals_.append((name, self.expr()))
-                if not self.eat(","):
-                    break
-        body = None
-        if self.eat("=>"):
-            self.expect("(")
-            body = self.seq()
-            self.expect(")")
-        return {"k": "Over", "exprs": exprs, "locals": locals_, "body": body}
-
-    def op_fork(self) -> dict:
-        self.expect("fork")
-        self.expect("(")
-        paths = []
-        while self.eat("=>"):
-            paths.append(self.branch_seq())
-        self.expect(")")
-        return {"k": "Parallel", "paths": paths}
-
-    def branch_seq(self) -> list:
-        ops = [self.op()]
-        while self.eat("|"):
-            ops.append(self.op())
-        return ops
-
-    def op_switch(self) -> dict:
-        self.expect("switch")
-        expr = None
-        if not self.at("("):
-            expr = self.expr()
-        self.expect("(")
-        cases = []
-        while True:
-            if self.eat("case"):
-                ce = self.search_expr()
-                self.expect("=>")
-                cases.append((ce, self.branch_seq()))
-            elif self.eat("default"):
-                self.expect("=>")
-                cases.append((None, self.branch_seq()))
-            else:
-                break
-        self.expect(")")
-        return {"k": "Switch", "expr": expr, "cases": cases}
-
-    def _join_style(self) -> str:
-        for style in ("inner", "left", "right", "anti"):
-            if self.at(style) and self.peek(1).text == "join":
-                self.next()
-                return style
-        return ""
-
-    def op_inner(self) -> dict:
-        return self._styled_join()
-
-    op_left = op_right = op_anti = op_inner
-
-    def _styled_join(self) -> dict:
-        style = self._join_style()
-        return self.op_join(style)
-
-    def op_join(self, style: str = "") -> dict:
-        self.expect("join")
-        right = None
-        if self.eat("("):
-            right = self.seq()
-            self.expect(")")
-        self.expect("on")
-        lk = self.expr()
-        rk = None
-        if self.eat("="):
-            rk = self.expr()
-        args = None
-        if not self._at_op_end():
-            args = self.assignments()
-        return {"k": "Join", "style": style, "right": right, "lk": lk,
-                "rk": rk, "args": args}
-
-    def op_expr(self) -> dict:
-        """Ambiguous op-position expression: OpAssignment if it is a
-        `:=` list, else OpExpr over a search-or-expression."""
-        save = self.i
-        try:
-            assigns = self.assignments(require_assign=True)
-            if self._at_op_end():
-                return {"k": "OpAssignment", "assigns": assigns}
-            if self.at("by") and all(
-                _is_agg_call(a["rhs"]) for a in assigns
-            ):
-                self.next()
-                keys = self.assignments()
-                return {"k": "Summarize", "aggs": assigns, "keys": keys,
-                        "limit": 0}
-        except ZfmtError:
-            pass
-        self.i = save
-        e = self.search_expr()
-        if self.eat("by") and _is_agg_call(e):
-            # `count() by k` shorthand (implied summarize)
-            keys = self.assignments()
-            return {"k": "Summarize", "keys": keys, "limit": 0,
-                    "aggs": [{"k": "Assign", "lhs": None, "rhs": e}]}
-        # search juxtaposition: adjacent atoms are an implicit AND
-        # (`is(<foo>) bar` == `is(<foo>) and bar`; newline-joined
-        # -I/-c sources compose the same way — query/ztests/ast)
-        while (
-            not self._at_op_end()
-            and self.peek().kind in ("ID", "NUM", "STR", "REGEX", "BSTR")
-            and self.peek().text not in ("and", "or", "not", "in", "by",
-                                         "with", "asc", "desc")
-        ):
-            rhs = _to_search_atom(self.search_expr())
-            e = {"k": "Bin", "op": "and", "lhs": _to_search_atom(e),
-                 "rhs": rhs}
-        return {"k": "OpExpr", "expr": e}
-
-    # --- assignments
-    def assignments(self, require_assign: bool = False) -> list:
-        out = [self.assignment(require_assign)]
-        while self.eat(","):
-            out.append(self.assignment(False))
-        return out
-
-    def assignment(self, require_assign: bool = False) -> dict:
-        save = self.i
-        try:
-            lhs = self.expr()
-            if self.eat(":="):
-                return {"k": "Assign", "lhs": lhs, "rhs": self.expr()}
-        except ZfmtError:
-            self.i = save
-            lhs = None
-        if require_assign and (lhs is None or True):
-            if lhs is None:
-                raise ZfmtError("not an assignment")
-            raise ZfmtError("not an assignment")
-        if lhs is None:
-            lhs = self.expr()
-        return {"k": "Assign", "lhs": None, "rhs": lhs}
-
-    def expr_list(self) -> list:
-        out = [self.expr()]
-        while self.eat(","):
-            out.append(self.expr())
-        return out
-
-    # --- expressions (precedence climbing)
-    def search_expr(self) -> dict:
-        """An expression in search position: bare identifiers, globs
-        and regexps become search Terms (parser.peg lexes these as
-        search atoms; zfmt classifies via IsSearch)."""
-        e = self.expr()
-        return _to_search(e)
-
-    def expr(self) -> dict:
-        return self.cond_expr()
-
-    def cond_expr(self) -> dict:
-        e = self.or_expr()
-        if self.at("?"):
-            self.next()
-            then = self.cond_expr()
-            self.expect(":")
-            els = self.cond_expr()
-            return {"k": "Cond", "cond": e, "then": then, "else": els}
-        return e
-
-    def or_expr(self) -> dict:
-        e = self.and_expr()
-        while self.peek().kind == "ID" and self.peek().text == "or":
-            self.next()
-            e = {"k": "Bin", "op": "or", "lhs": e, "rhs": self.and_expr()}
-        return e
-
-    def and_expr(self) -> dict:
-        e = self.cmp_expr()
-        while self.peek().kind == "ID" and self.peek().text == "and":
-            self.next()
-            e = {"k": "Bin", "op": "and", "lhs": e, "rhs": self.cmp_expr()}
-        return e
-
-    def cmp_expr(self) -> dict:
-        e = self.add_expr()
-        while True:
-            t = self.peek()
-            if t.kind == "OP" and t.text in ("==", "!=", "<", "<=", ">", ">="):
-                self.next()
-                e = {"k": "Bin", "op": t.text, "lhs": e,
-                     "rhs": self.add_expr()}
-            elif t.kind == "ID" and t.text == "in":
-                self.next()
-                e = {"k": "Bin", "op": "in", "lhs": e,
-                     "rhs": self.add_expr()}
-            else:
-                return e
-
-    def add_expr(self) -> dict:
-        e = self.mul_expr()
-        while self.peek().kind == "OP" and self.peek().text in ("+", "-"):
-            op = self.next().text
-            e = {"k": "Bin", "op": op, "lhs": e, "rhs": self.mul_expr()}
-        return e
-
-    def mul_expr(self) -> dict:
-        e = self.unary_expr()
-        while self.peek().kind == "OP" and self.peek().text in ("*", "/", "%"):
-            op = self.next().text
-            e = {"k": "Bin", "op": op, "lhs": e, "rhs": self.unary_expr()}
-        return e
-
-    def unary_expr(self) -> dict:
-        t = self.peek()
-        if t.kind == "OP" and t.text in ("!", "-"):
-            self.next()
-            return {"k": "Unary", "op": t.text,
-                    "operand": self.unary_expr()}
-        if t.kind == "ID" and t.text == "not":
-            self.next()
-            return {"k": "Unary", "op": "!",
-                    "operand": self.unary_expr()}
-        return self.postfix_expr()
-
-    def postfix_expr(self) -> dict:
-        e = self.primary()
-        while True:
-            t = self.peek()
-            if t.kind == "OP" and t.text == ".":
-                self.next()
-                name = self.next().text
-                e = {"k": "Bin", "op": ".", "lhs": e,
-                     "rhs": {"k": "ID", "name": name}}
-            elif t.kind == "OP" and t.text == "[":
-                self.next()
-                if self.at(":"):
-                    self.next()
-                    hi = None if self.at("]") else self.expr()
-                    self.expect("]")
-                    e = {"k": "Slice", "expr": e, "from": None, "to": hi}
-                    continue
-                idx = self.expr()
-                if self.eat(":"):
-                    hi = None if self.at("]") else self.expr()
-                    self.expect("]")
-                    e = {"k": "Slice", "expr": e, "from": idx, "to": hi}
-                else:
-                    self.expect("]")
-                    e = {"k": "Index", "expr": e, "index": idx}
-            else:
-                return e
-
-    def primary(self) -> dict:
-        t = self.peek()
-        if t.kind == "NUM":
-            self.next()
-            typ = "float64" if "." in t.text else "int64"
-            return {"k": "Prim", "type": typ, "text": t.text}
-        if t.kind == "STR":
-            self.next()
-            return {"k": "Prim", "type": "string", "text": t.text[1:-1]}
-        if t.kind == "FSTR":
-            self.next()
-            return _parse_fstring(t.text)
-        if t.kind == "REGEX":
-            self.next()
-            return {"k": "Regexp", "pattern": t.text[1:-1]}
-        if t.kind == "TIME":
-            self.next()
-            return {"k": "Prim", "type": "time", "text": t.text}
-        if t.kind == "DUR":
-            self.next()
-            return {"k": "Prim", "type": "duration", "text": t.text}
-        if t.kind == "IP":
-            self.next()
-            typ = "net" if "/" in t.text else "ip"
-            return {"k": "Prim", "type": typ, "text": t.text}
-        if t.kind == "BSTR":
-            self.next()
-            return {"k": "Glob" if "*" in t.text else "Term",
-                    "text": t.text}
-        if t.kind == "OP":
-            if t.text == "(":
-                self.next()
-                if self.peek().kind == "ID" and self.peek().text == "over":
-                    ov = self.op_over()
-                    body = []
-                    while self.eat("|"):
-                        body.append(self.op())
-                    self.expect(")")
-                    return {"k": "OverExpr", "exprs": ov["exprs"],
-                            "locals": ov["locals"], "body": body}
-                e = self.expr()
-                self.expect(")")
-                return {"k": "Paren", "expr": e}
-            if t.text == "{":
-                return self.record_expr()
-            if t.text == "[":
-                self.next()
-                elems = self.vector_elems("]")
-                return {"k": "Array", "elems": elems}
-            if t.text == "|":
-                # |[ ... ]| set or |{ ... }| map
-                nxt = self.peek(1)
-                if nxt.text == "[":
-                    self.next()
-                    self.next()
-                    elems = self.vector_elems("]")
-                    self.expect("|")
-                    return {"k": "Set", "elems": elems}
-                if nxt.text == "{":
-                    self.next()
-                    self.next()
-                    entries = []
-                    while not self.eat("}"):
-                        if entries:
-                            self.expect(",")
-                        k = self.expr()
-                        self.expect(":")
-                        entries.append((k, self.expr()))
-                    self.expect("|")
-                    return {"k": "Map", "entries": entries}
-            if t.text == "<":
-                # type value <...>; possibly a cast <type>(expr)
-                text = self._angle_type_text()
-                tv = {"k": "TypeValue", "text": text}
-                if self.at("("):
-                    self.next()
-                    inner = self.expr()
-                    self.expect(")")
-                    return {"k": "Cast", "type": tv, "expr": inner}
-                return tv
-        if t.kind == "ID":
-            name = t.text
-            if name == "this":
-                self.next()
-                return {"k": "ID", "name": "this"}
-            if name in ("true", "false"):
-                self.next()
-                return {"k": "Prim", "type": "bool", "text": name}
-            if name == "null":
-                self.next()
-                return {"k": "Prim", "type": "null", "text": "null"}
-            if name == "grep" and self.peek(1).text == "(":
-                self.next()
-                self.next()
-                pat = self.expr()
-                e = None
-                if self.eat(","):
-                    e = self.expr()
-                self.expect(")")
-                return {"k": "Grep", "pattern": pat, "expr": e}
-            if self.peek(1).text == "(" and self.peek(1).pos == (
-                t.pos + len(name)
-            ):
-                self.next()
-                self.next()
-                args = []
-                while not self.eat(")"):
-                    if args:
-                        self.expect(",")
-                    args.append(self.expr())
-                call = {"k": "Call", "name": name, "args": args}
-                if self.peek().kind == "ID" and self.peek().text == "where":
-                    self.next()
-                    call = {"k": "Agg", "name": name,
-                            "expr": args[0] if args else None,
-                            "where": self.search_expr(), "call": call}
-                return call
-            self.next()
-            return {"k": "ID", "name": name}
-        raise ZfmtError(f"unexpected token {t.text!r} at {t.pos}")
-
-    def record_expr(self) -> dict:
-        self.expect("{")
-        elems = []
-        while not self.eat("}"):
-            if elems:
-                self.expect(",")
-            if self.eat("..."):
-                elems.append(("spread", self.expr()))
-                continue
-            t = self.next()
-            name = t.text[1:-1] if t.kind == "STR" else t.text
-            if self.eat(":"):
-                elems.append(("field", name, self.expr()))
-            else:
-                elems.append(("id", name))
-        return {"k": "Record", "elems": elems}
-
-    def vector_elems(self, closer: str) -> list:
-        elems = []
-        while not self.eat(closer):
-            if elems:
-                self.expect(",")
-            if self.eat("..."):
-                elems.append(("spread", self.expr()))
-            else:
-                elems.append(("v", self.expr()))
-        return elems
-
-    def _angle_type_text(self) -> str:
-        """Raw text of a <...> type value (balanced angle brackets)."""
-        start = self.peek().pos
-        self.expect("<")
-        depth = 1
-        end = start
-        while depth and not self.done():
-            t = self.next()
-            if t.text == "<":
-                depth += 1
-            elif t.text == ">":
-                depth -= 1
-            end = t.pos + len(t.text)
-        return self.src[start + 1 : end - 1]
-
-
-def _parse_fstring(text: str) -> dict:
-    """f"..." literal → FString node with text/expr parts."""
-    inner = text[2:-1]
-    parts: list = []
-    buf = ""
-    i = 0
-    while i < len(inner):
-        ch = inner[i]
-        if ch == "\\":
-            buf += inner[i : i + 2]
-            i += 2
-            continue
-        if ch == "{":
-            depth = 1
-            j = i + 1
-            while j < len(inner) and depth:
-                if inner[j] == "{":
-                    depth += 1
-                elif inner[j] == "}":
-                    depth -= 1
-                elif inner[j] in "\"'":
-                    q = inner[j]
-                    j += 1
-                    while j < len(inner) and inner[j] != q:
-                        if inner[j] == "\\":
-                            j += 1
-                        j += 1
-                j += 1
-            if buf:
-                parts.append(("text", buf))
-                buf = ""
-            sub = inner[i + 1 : j - 1]
-            parts.append(("expr", _RawParser(sub).expr()))
-            i = j
-            continue
-        buf += ch
-        i += 1
-    if buf:
-        parts.append(("text", buf))
-    return {"k": "FString", "parts": parts}
-
-
-def _to_search_atom(e: dict) -> dict:
-    """A juxtaposed search atom: bare primitives become Terms with
-    their raw source text (the PEG's search-term rule)."""
-    if e["k"] == "Prim" and e["type"] in ("int64", "float64"):
-        return {"k": "Term", "text": e["text"]}
-    return e
-
-
-def _to_search(e: dict) -> dict:
-    """Convert bare identifiers in a pure and/or/! tree to search
-    Terms (the PEG parses these as search atoms; IsSearch in
-    zfmt/ast.go:793 then classifies the op as a search)."""
-    if e["k"] == "Bin" and e["op"] in ("and", "or"):
-        return {"k": "Bin", "op": e["op"], "lhs": _to_search(e["lhs"]),
-                "rhs": _to_search(e["rhs"])}
-    if e["k"] == "Unary" and e["op"] == "!":
-        return {"k": "Unary", "op": "!", "operand": _to_search(e["operand"])}
-    if e["k"] == "ID" and e["name"] not in ("this",):
-        return {"k": "Term", "text": e["name"]}
-    return e
-
-
-def parse_raw(src: str) -> list:
-    return _RawParser(src).parse()
 
 
 # ---------------------------------------------------------------------------
@@ -1645,12 +691,6 @@ def _pattern_text(pat) -> str:
     return text
 
 
-def _is_agg_call(e) -> bool:
-    return (
-        e["k"] in ("Call", "Agg") and e["name"] in _AGG_NAMES
-    )
-
-
 def _as_agg_summarize(e):
     """isAggFunc (zfmt/ast.go:723): a bare agg call in op position
     prints as an implied summarize."""
@@ -1711,7 +751,7 @@ def format_ast(seq) -> str:
 
 def canonical(src: str) -> str:
     """`super dev compile -C`: parse + canonical AST print."""
-    return format_ast(parse_raw(src))
+    return format_ast(parse_ast(src))
 
 
 # ---------------------------------------------------------------------------
@@ -2773,7 +1813,7 @@ def format_dag(seq) -> str:
 
 def semantic(src: str, env=None) -> str:
     """`super dev compile -C -s`: parse + semantic + DAG print."""
-    return format_dag(_Sem(env).analyze(parse_raw(src)))
+    return format_dag(_Sem(env).analyze(parse_ast(src)))
 
 
 # ---------------------------------------------------------------------------
@@ -2860,7 +1900,7 @@ def dev_compile(src: str, canon: bool = True, sem: bool = False,
     -C alone prints the canonical AST; adding -s / -O / -P prints the
     semantic / optimized / parallelized DAG instead (command.go).
     """
-    seq = parse_raw(src)
+    seq = parse_ast(src)
     if not (sem or opt or par):
         return format_ast(seq)
     dag = _Sem(env).analyze(seq)
@@ -3151,7 +2191,7 @@ def dag_json(src: str, opt: bool = False, par: int = 0, env=None) -> str:
     """`super dev compile` without -C: the kind-tagged JSON DAG."""
     import json as _json
 
-    seq = parse_raw(src)
+    seq = parse_ast(src)
     dag = _Sem(env).analyze(seq)
     if opt or par:
         dag = optimize_dag(dag)

@@ -456,24 +456,24 @@ class QueryService:
 
             return ("\n".join(df_to_zson_lines(df).collect()) + "\n").encode()
         if fmt in ("arrows", "parquet", "zng"):
-            d = tempfile.mkdtemp(prefix="svc_out_")
-            if fmt == "arrows":
-                from zed_spark.sources.arrow_io import write_arrows
+            with tempfile.TemporaryDirectory(prefix="svc_out_") as d:
+                if fmt == "arrows":
+                    from zed_spark.sources.arrow_io import write_arrows
 
-                p = os.path.join(d, "out.arrows")
-                write_arrows(df, p, single_file=True)
-            elif fmt == "zng":
-                from zed_spark.sources.zng import write_zng
+                    p = os.path.join(d, "out.arrows")
+                    write_arrows(df, p, single_file=True)
+                elif fmt == "zng":
+                    from zed_spark.sources.zng import write_zng
 
-                p = os.path.join(d, "out.zng")
-                write_zng(df, p, single_file=True)
-            else:
-                df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "pq"))
-                import glob as _g
+                    p = os.path.join(d, "out.zng")
+                    write_zng(df, p, single_file=True)
+                else:
+                    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "pq"))
+                    import glob as _g
 
-                p = _g.glob(os.path.join(d, "pq", "part-*.parquet"))[0]
-            with open(p, "rb") as fh:
-                return fh.read()
+                    p = _g.glob(os.path.join(d, "pq", "part-*.parquet"))[0]
+                with open(p, "rb") as fh:
+                    return fh.read()
         raise ApiError(f"unsupported MIME type: {fmt}")
 
     def _load_body(self, body: bytes, ctype: str, params: dict) -> "object":
@@ -507,7 +507,6 @@ class QueryService:
                 return read_vng(self.spark, p)
         from zed_spark.sources.readers import read_any
 
-        d = tempfile.mkdtemp(prefix="svc_load_")
         if fmt is None:
             # auto-detect: zson / zng / json (the reference's anyio
             # detector order, restricted to self-describing formats —
@@ -544,6 +543,9 @@ class QueryService:
                 return zson_text_to_df(self.spark, body.decode("utf-8"))[0]
             except Exception:
                 pass
+        # the returned frame reads the body file lazily, so the
+        # directory outlives this call; only paths that write make one
+        d = tempfile.mkdtemp(prefix="svc_load_")
         if fmt is None:
             for trial in ("zson", "zng", "json"):
                 p = os.path.join(d, "body" + ext[trial])
@@ -739,11 +741,11 @@ class QueryService:
             # ({Msg,Pos,End} — compiler/parser/api.go:58).
             spec = json.loads(body.decode() or "{}") if body.strip() else {}
             text = spec.get("query") or ""
-            from zed_spark.lang.zfmt import parse_raw
+            from zed_spark.lang.parser import parse_ast
 
             try:
-                seq = parse_raw(text)
-            except Exception as e:
+                seq = parse_ast(text)
+            except SyntaxError as e:
                 m = re.search(r"(?:at|pos)\s+(\d+)", str(e))
                 pos = int(m.group(1)) if m else 0
                 payload = {
@@ -915,33 +917,30 @@ class QueryService:
         """Output channel names of a query, in appearance order
         (`output NAME` ops; default channel is main) — the zjson
         mux's QueryChannelSet/End frames are per channel."""
-        try:
-            from zed_spark.lang.zfmt import parse_raw
+        from zed_spark.lang.parser import parse_ast
 
-            names: list[str] = []
+        names: list[str] = []
 
-            def walk(seq):
-                for op in seq:
-                    if not isinstance(op, dict):
-                        continue
-                    if op.get("k") == "Output":
-                        if op["name"] not in names:
-                            names.append(op["name"])
-                    for v in op.values():
-                        if isinstance(v, list):
-                            for x in v:
-                                if isinstance(x, list):
-                                    walk(x)
-                                elif isinstance(x, tuple):
-                                    for y in x:
-                                        if isinstance(y, list):
-                                            walk(y)
-                            walk(v)
+        def walk(seq):
+            for op in seq:
+                if not isinstance(op, dict):
+                    continue
+                if op.get("k") == "Output":
+                    if op["name"] not in names:
+                        names.append(op["name"])
+                for v in op.values():
+                    if isinstance(v, list):
+                        for x in v:
+                            if isinstance(x, list):
+                                walk(x)
+                            elif isinstance(x, tuple):
+                                for y in x:
+                                    if isinstance(y, list):
+                                        walk(y)
+                        walk(v)
 
-            walk(parse_raw(text))
-            return names or ["main"]
-        except Exception:
-            return ["main"]
+        walk(parse_ast(text))
+        return names or ["main"]
 
     @staticmethod
     def _writer_error(e: Exception, fmt: str, df) -> str | None:
