@@ -223,18 +223,23 @@ def test_uniq_input_partitions_hint_paths_agree(spark):
     assert one == many == probe and len(one) > 1
 
 
-def test_table_scan_partitions_memoized(spark):
-    from zed_spark.sources import readers
+def test_table_scan_partitions_memoized(spark, monkeypatch):
+    """The split count is kept in the table's footers entry: a second
+    call runs no probe."""
+    from tests.conftest import SF_DIR as sf
+    from zed_spark.sources import footers, fsio, readers
 
-    readers._SCAN_PARTS_MEMO.clear()
-    n1 = readers.table_scan_partitions(spark, "/root/testdata/sf0.001", "events")
+    path = f"{sf}/events.parquet"
+    n1 = readers.table_scan_partitions(spark, sf, "events")
     assert n1 >= 1
-    key = (spark.sparkContext.applicationId, "/root/testdata/sf0.001", "events")
-    assert readers._SCAN_PARTS_MEMO[key] == n1
-    # poison the memo to prove the second call doesn't re-probe
-    readers._SCAN_PARTS_MEMO[key] = 12345
-    assert readers.table_scan_partitions(spark, "/root/testdata/sf0.001", "events") == 12345
-    readers._SCAN_PARTS_MEMO.clear()
+    entry = footers._lookup(footers._key(spark, path), fsio.identity(path))
+    assert entry is not None and entry.parts == n1
+
+    def no_probe(*a, **k):
+        raise AssertionError("split count probed again")
+
+    monkeypatch.setattr(readers, "read_table", no_probe)
+    assert readers.table_scan_partitions(spark, sf, "events") == n1
 
 
 def test_shape_groups_single_pass_parse_plan(spark, tmp_path):
@@ -254,3 +259,29 @@ def test_shape_groups_single_pass_parse_plan(spark, tmp_path):
         assert scan_pos != -1
         # everything above the cache scan is projection/filter only
         assert "from_json" not in plan[:scan_pos]
+
+
+def test_scoped_cache_threads_keep_one_frame(spark):
+    """Eight threads registering different frames in one slot leave at
+    most one of them cached, and none of the calls raises."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from zed_spark.cache_scope import _SLOTS, scoped_cache
+
+    frames = [
+        spark.range(50).select((F.col("id") + i).alias("x")) for i in range(8)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            list(ex.map(lambda df: scoped_cache(df, "test.threads"), frames, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    cached = [df for df in frames if df.storageLevel.useMemory]
+    assert len(cached) <= 1
+    assert all(df is _SLOTS["test.threads"][1] for df in cached)
+    for df in frames:
+        df.unpersist()
+    del _SLOTS["test.threads"]

@@ -595,3 +595,29 @@ def test_requests_leave_no_temp_dirs(spark, tmp_path, monkeypatch):
     assert s._load_body(b"{a:1}\n{a:2}\n", "", {}).count() == 2
     assert s._load_body(b"{a:1}\n", "application/x-zson", {}).count() == 1
     assert not list(tmp_path.glob("svc_*"))
+
+
+def test_load_ndjson_body(spark, tmp_path_factory):
+    """A load posted as application/x-ndjson is read as JSON lines:
+    the commit returns 200 and its rows answer a later query."""
+    from zed_spark.sources.lake import Lake
+
+    root = str(tmp_path_factory.mktemp("ndjson"))
+    Lake(spark, root).create_pool("p", key="a")
+    s = QueryService(spark, sf_dir=SF_DIR, lake_root=root)
+    base = f"http://127.0.0.1:{s.start()}"
+    try:
+        req = urllib.request.Request(
+            f"{base}/pool/p/branch/main",
+            data=b'{"a":2,"b":"y"}\n{"a":1,"b":"x"}\n',
+            headers={"Content-Type": "application/x-ndjson"},
+            method="POST",
+        )
+        with urllib.request.urlopen(req, timeout=30) as r:
+            assert r.status == 200
+        code, out = _post(base, "from p | sort a")
+        assert code == 200
+        rows = [json.loads(ln) for ln in out.splitlines() if ln]
+        assert [(r["a"], r["b"]) for r in rows] == [(1, "x"), (2, "y")]
+    finally:
+        s.stop()

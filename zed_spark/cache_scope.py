@@ -23,10 +23,16 @@ when the previous invocation's cache is dropped.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 # slot -> ((applicationId, semanticHash), DataFrame)
 _SLOTS: dict = {}
+# service handler threads share one session: the read-compare-swap of a
+# slot and the cache() it guards must not interleave, or two threads
+# each see an empty slot and both frames stay cached
+_LOCK = threading.Lock()
 
 
 def scoped_cache(df: DataFrame, slot: str) -> DataFrame:
@@ -34,13 +40,14 @@ def scoped_cache(df: DataFrame, slot: str) -> DataFrame:
         ident = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
     except Exception:  # noqa: BLE001 — identity probe must never break the query
         return df.cache()
-    prev = _SLOTS.get(slot)
-    if prev is not None and prev[0] != ident:
-        try:
-            prev[1].unpersist(False)
-        except Exception:  # noqa: BLE001 — e.g. the owning session was stopped
-            pass
-        prev = None
-    if prev is None:
-        _SLOTS[slot] = (ident, df)
-    return df.cache()
+    with _LOCK:
+        prev = _SLOTS.get(slot)
+        if prev is not None and prev[0] != ident:
+            try:
+                prev[1].unpersist(False)
+            except Exception:  # noqa: BLE001 — e.g. the owning session was stopped
+                pass
+            prev = None
+        if prev is None:
+            _SLOTS[slot] = (ident, df)
+        return df.cache()

@@ -490,11 +490,14 @@ class QueryService:
         if mt and mt not in _MIME_FMT:
             raise ApiError(f"unsupported MIME type: {mt}")
         fmt = _MIME_FMT.get(mt)
+        if fmt == "ndjson":
+            # an ndjson body is one JSON record per line: the json reader
+            fmt = "json"
         ext = {
             "csv": ".csv", "tsv": ".tsv", "json": ".json", "line": ".txt",
             "zeek": ".log", "zson": ".zson", "zjson": ".zjson",
             "arrows": ".arrows", "parquet": ".parquet", "zng": ".zng",
-            "ndjson": ".json", "vng": ".vng",
+            "vng": ".vng",
         }
         if fmt == "vng" or (fmt is None and body[:2] != b"\x1f\x8b"):
             from zed_spark.sources.vng import is_vng, read_vng

@@ -225,6 +225,44 @@ def getsize(path: str) -> int:
     return int(fs.getFileStatus(p).getLen())
 
 
+def _is_data_name(name: str) -> bool:
+    # Spark's file index skips these too (_SUCCESS, .crc sidecars)
+    return not name.startswith(("_", "."))
+
+
+def identity(path: str) -> tuple:
+    """What a reader must compare to tell whether `path` changed: a
+    file gives (size, mtime_ns); a directory gives the sorted
+    (relative name, size, mtime) of the data files under it."""
+    if not is_uri(path):
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (st.st_size, st.st_mtime_ns)
+        out = []
+        for top, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if _is_data_name(d)]
+            for name in files:
+                if _is_data_name(name):
+                    st = os.stat(os.path.join(top, name))
+                    rel = os.path.relpath(os.path.join(top, name), path)
+                    out.append((rel, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+    _, fs, p = _hadoop(path)
+    st = fs.getFileStatus(p)
+    if st.isFile():
+        return (int(st.getLen()), int(st.getModificationTime()))
+    root = _uri_str(st.getPath()).rstrip("/") + "/"
+    out = []
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        f = it.next()
+        full = _uri_str(f.getPath())
+        rel = full[len(root):] if full.startswith(root) else full
+        if all(_is_data_name(part) for part in rel.split("/")):
+            out.append((rel, int(f.getLen()), int(f.getModificationTime())))
+    return tuple(sorted(out))
+
+
 def read_bytes(path: str) -> bytes:
     if not is_uri(path):
         with open(path, "rb") as f:

@@ -36,7 +36,7 @@ from __future__ import annotations
 import json
 import os
 
-from zed_spark.sources import fsio
+from zed_spark.sources import footers, fsio
 import time
 import uuid
 
@@ -773,16 +773,37 @@ class Pool:
         return commit_id
 
     # --- scan --------------------------------------------------------
+    def _read_objects(self, objs: list[str], ref) -> DataFrame:
+        """Read data objects as one frame. Objects committed at
+        different times may have different shapes (the reference's
+        pools are heterogeneous), so footer schemas are merged: later
+        columns appear instead of the first file's schema winning.
+
+        Objects are write-once `obj_<ksuid>` directories (`load`,
+        `delete_where` and `compact` always write a new ksuid), so the
+        object name list is the read's file identity: `footers` keeps
+        the merged schema per (pool, ref) and infers again only when
+        the list changes. `ref` is the branch or commit scanned, or
+        None for a one-off read (`compact(ids=)`)."""
+        paths = [fsio.join(self.cfg.path, o) for o in objs]
+        return footers.read(
+            self.spark, (self.cfg.path, ref), paths, tuple(objs), merge=True
+        )
+
     def scan(
         self,
         branch: str = "main",
         ordered: bool = False,
         keep_internal: bool = False,
-        schema=None,
     ) -> DataFrame:
         """PoolScan: read a branch's live objects. Filters pushed by
         the caller reach parquet row-group stats; because objects are
         key-sorted, key-range predicates skip whole files.
+
+        The objects' footer schemas are merged (mergeSchema), but only
+        when the branch's live object set changed since its last scan
+        in this application; a repeat scan reuses the merged schema
+        and plans without a job (`_read_objects`).
 
         ordered=True reproduces the reference's key-ordered scan
         (asc/desc per the pool config). It costs a global sort in
@@ -800,19 +821,7 @@ class Pool:
             raise ValueError(f'"{branch}": branch not found')
         if not objs:
             raise ValueError(f"pool {self.cfg.name!r} is empty on branch {branch!r}")
-        paths = [fsio.join(self.cfg.path, o) for o in objs]
-        if schema is not None:
-            # caller knows the pool's shape (e.g. the signature store's
-            # fixed schema): skip the mergeSchema footer pass — a
-            # per-scan driver job that exists only to DISCOVER the
-            # schema (round-12, incremental_dedup fixed-cost cut)
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            # objects committed at different times may have different
-            # shapes (the reference's pools are heterogeneous): merge
-            # footer schemas so later columns appear instead of silently
-            # adopting the first file's schema
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._read_objects(objs, branch)
         if not keep_internal:
             # ns-exact time shadows are lake-internal (size/stat
             # parity); the query layer sees µs timestamps only.
@@ -939,8 +948,7 @@ class Pool:
             if f"obj_{a}" not in live:
                 raise ValueError(f"{a}: object not found")
             drops.append(f"obj_{a}")
-        paths = [fsio.join(self.cfg.path, o) for o in drops]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self._read_objects(drops, None)
         commit_id = new_ksuid()
         self._write_object(df, commit_id)
         stats = self._key_stats(df)

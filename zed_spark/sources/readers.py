@@ -22,12 +22,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from zed_spark.sources import footers, fsio
+
 # tables whose parquet files carry TIMESTAMP(NANOS) — Spark reads them
 # as LongType ns (legacy nanosAsLong); convert to µs TimestampType.
 _NS_TS_COLS = {"events": ["ts"]}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One of the standard test tables, `<sf_dir>/<name>.parquet`.
+
+    The schema comes from `footers`: Spark infers it (one footer job)
+    on the first read of the file and again only after the file or a
+    parquet-inference conf changes, so a repeat read plans without
+    launching a job. Every read still scans the parquet. ns-precision timestamp columns
+    (LongType under nanosAsLong) become µs TimestampType."""
     # set defensively at runtime: a caller-provided session (e.g. the
     # round driver's) may lack both; without nanosAsLong the events
     # scan fails with PARQUET_TYPE_ILLEGAL on TIMESTAMP(NANOS), and a
@@ -35,7 +44,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name in _NS_TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = footers.read(spark, path, [path], fsio.identity(path))
     for c in _NS_TS_COLS.get(name, []):
         if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
             # integer division: ns are ~2^60, double division would
@@ -44,33 +54,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# scan split counts memoized per (application, data dir, table): the
-# probe builds the scan's RDD plan driver-side (analysis + physical
-# planning + a py4j conversion, ~10-30 ms) and its answer is a pure
-# function of the on-disk file layout plus the session's split config,
-# both fixed for a given application + directory. This is a plan-shape
-# decision memo, NOT a result cache — every invocation still computes
-# from the parquet inputs. Keyed on applicationId (not id(spark):
-# CPython can reuse an id after a session is GC'd — round-11 ADVICE).
-_SCAN_PARTS_MEMO: dict = {}
-
-
 def table_scan_partitions(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Number of scan splits for a test table — memoized per
-    (application, dir, table) so plan-shape heuristics (fan-out,
-    uniq's single-partition fast path) don't re-pay the RDD probe on
-    every invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    n = _SCAN_PARTS_MEMO.get(key)
-    if n is None:
-        n = read_table(spark, sf_dir, name).rdd.getNumPartitions()
-        _SCAN_PARTS_MEMO[key] = n
-    return n
+    """Number of scan splits for a test table. The probe builds the
+    scan's RDD plan driver-side (~10-30 ms), so its answer is kept in
+    the table's `footers` entry beside the schema: plan-shape
+    heuristics (fan-out, uniq's single-partition fast path) pay it
+    once per file identity, and a rewritten table is counted again."""
+    path = f"{sf_dir}/{name}.parquet"
+    return footers.split_count(
+        spark, path, fsio.identity(path),
+        lambda: read_table(spark, sf_dir, name).rdd.getNumPartitions(),
+    )
 
 
 def read_any(spark: SparkSession, path: str, fmt: str = "auto", **options) -> DataFrame:
-    from zed_spark.sources import fsio
-
     path = fsio.normalize_uri(path)
     if fmt == "auto":
         fmt = _sniff_format(path)
@@ -127,8 +124,6 @@ def _sniff_format(path: str) -> str:
     # content. fsio routes URIs (s3a://, file://) through Hadoop
     # FileSystem, so sniffing works on object storage too.
     import json as _json
-
-    from zed_spark.sources import fsio
 
     if fsio.is_dir(path):
         files = [

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from zed_spark.textops.dedup import (
     connected_components,
@@ -48,9 +49,13 @@ from zed_spark.textops.minhash import (
     shingle_base,
 )
 
-SIGNATURE_SCHEMA = (
-    "__h string, min_id long, minhashes array<long>, hashset array<long>, comp long"
-)
+SIGNATURE_SCHEMA = T.StructType([
+    T.StructField("__h", T.StringType()),
+    T.StructField("min_id", T.LongType()),
+    T.StructField("minhashes", T.ArrayType(T.LongType())),
+    T.StructField("hashset", T.ArrayType(T.LongType())),
+    T.StructField("comp", T.LongType()),
+])
 
 
 def _text_signatures(
@@ -152,9 +157,13 @@ def write_signatures(lake, pool_name: str, sigs: DataFrame) -> str:
 
 
 def read_signatures(lake, pool_name: str) -> DataFrame:
-    # the signature store has a FIXED schema, so the scan skips the
-    # mergeSchema footer pass (a per-invocation schema-discovery job)
-    return lake.pool(pool_name).scan(schema=SIGNATURE_SCHEMA)
+    """The stored signature table, as `SIGNATURE_SCHEMA`: the pool
+    scan's schema comes from the footers, which may order or type the
+    columns differently (a projection that changes nothing is removed
+    by the optimizer)."""
+    return lake.pool(pool_name).scan().select(
+        *[F.col(f.name).cast(f.dataType) for f in SIGNATURE_SCHEMA.fields]
+    )
 
 
 def _bands_of_array(num_hashes: int, bands: int):
